@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness — one compact JSON line on stdout.
 
-Runs the flagship extraction pipeline plus the headline operator
-queries at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32).
+Runs the flagship extraction pipeline plus every registry query
+(``extractor.queries.REGISTRY``) at ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 testdata directory) on ``local[$SPARK_GRAFT_CPUS]``
+(default 32).
 
 Stdout (single line, sized to survive any tail-capture buffer —
 BENCH_r04.json recorded a truncated fragment of the old 135-entry
@@ -15,7 +16,11 @@ line and failed to parse):
    "n_queries": N, "per_query_file": "BENCH/bench_sf..._latest.json"}
 
 The full per-query timing map is written to ``per_query_file``;
-round-over-round per-query continuity diffs read that file.
+round-over-round per-query continuity diffs read that file.  Its
+``pipeline_extract`` key is the flagship run over the replicated
+pages table; the same record's ``pipeline_extract_replicates`` field
+names the registry entry (``extract_pipeline``) that run scales up,
+which is also timed under its own name at ``$SPARK_GRAFT_SF_DIR``.
 
 Every query is forced through the noop sink (full materialization of
 every column — count() would let Catalyst prune the work).
@@ -37,179 +42,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
-
-HEADLINE_QUERIES = [
-    "route_and_validate",
-    "clean_grounding",
-    "page_assembly",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "ann_topk_cosine",
-    "lang_id",
-    "quality_score",
-    "doc_fingerprint",
-    "corpus_select",
-    "winnowing_fingerprints",
-    "stratified_sample",
-    "vocab_topk",
-    "sketch_distinct_kmv",
-    "ann_ivf",
-    "pricing_summary",
-    "revenue_by_nation",
-    "events_windowed",
-    "sessionize",
-    "events_topk_users",
-    "events_asof_join",
-    "events_range_join",
-    # r2 additions (appended; r1 names stay stable for per-query diffs)
-    "image_extract",
-    "dedup_embedding_lsh",
-    "pii_scrub",
-    "domain_blocklist_stats",
-    "doc_chunking",
-    "repetition_stats",
-    # r3 additions: the two iterative/composed queries get wall-time
-    # tracking before round 4 scales anything (VERDICT r2 item 9)
-    "corpus_select_fuzzy",
-    "dedup_clusters",
-    # r3 new tiers
-    "html_outlinks",
-    "pagerank",
-    "paragraph_dedup",
-    "benchmark_contamination",
-    "url_canonicalize",
-    "source_mixture_sample",
-    "dedup_incremental_lsh",
-    "dedup_containment",
-    "ann_recall",
-    "events_funnel",
-    # r4 additions (appended; earlier names stay stable for
-    # round-over-round per-query diffs)
-    "pagerank_redistribute",
-    "host_pagerank",
-    "lsh_index_stats",
-    "gopher_quality",
-    "pack_sequences",
-    "unigram_surprisal",
-    "frontier_score",
-    "crawl_delta",
-    "crawl_latest",
-    "tfidf_topk",
-    "anchor_topk",
-    "seq_len_histogram",
-    "dedup_keep_best",
-    "crawl_moves",
-    "embedding_clusters",
-    "corpus_report",
-    "wet_roundtrip",
-    "quality_buckets",
-    "dedup_lsh_recall",
-    "host_cap_sample",
-    "training_shards",
-    "dup_span_stats",
-    "e2e_wet_corpus",
-    "dedup_simhash_hamming",
-    "warc_roundtrip",
-    "e2e_warc_extract",
-    "robots_filter",
-    "redirect_resolve",
-    "page_metadata",
-    "soft404",
-    "recrawl_priority",
-    "fetch_schedule",
-    "charset_decode",
-    "sitemap_roundtrip",
-    "sitemap_frontier",
-    "warc_integrity",
-    "host_link_stats",
-    "e2e_crawl_cycle",
-    # r4 continuation 4
-    "host_trustrank",
-    "robots_parse",
-    "host_templates",
-    "retention_cohorts",
-    "host_mirrors",
-    "crawl_novelty",
-    "template_strip",
-    "e2e_robots_fetch",
-    "top_dup_ngrams",
-    "anchor_spam",
-    "canonical_map",
-    "wat_roundtrip",
-    "dedup_incremental_exact",
-    "e2e_wat_rank",
-    "extraction_churn",
-    "build_postings",
-    "postings_query",
-    "postings_merge",
-    "phrase_query",
-    "e2e_wet_index",
-    "postings_stats",
-    "ranked_query",
-    "term_snippets",
-    # r4 continuation 5
-    "cdx_roundtrip",
-    "cdx_lookup",
-    "bigram_surprisal",
-    "host_hits",
-    "dup_span_strip",
-    "bloom_gate",
-    "text_normalize",
-    "e2e_cdx_crawl",
-    "cdc_dedup",
-    "collocations",
-    "cdc_incremental",
-    "length_quantiles",
-    "lang_mismatch",
-    "host_sections",
-    "mixture_drift",
-    "robots_sitemaps",
-    "e2e_discovery",
-    "degree_histogram",
-    "ann_quantized",
-    "host_categories",
-    "quality_percentiles",
-    "events_spikes",
-    "query_traps",
-    "lang_mix",
-    "vocab_coverage",
-    "robots_precedence",
-    "jsonl_roundtrip",
-    "anchor_index",
-    "winnow_pairs",
-    "e2e_warc_to_wet",
-    # r5 additions (appended; earlier names stay stable)
-    "pack_sequences_tokens",
-    "quality_classifier",
-    "corpus_select_model",
-    "image_dedup_phash",
-    "host_reciprocity",
-    "cocitation_pairs",
-    "classifier_vs_rules",
-    "compression_ratio",
-    "train_split_assign",
-    "e2e_curation_shards",
-    "split_leakage",
-    "classifier_weighted_sample",
-    "bm25_query",
-    "c4_rules",
-    "mixture_plan",
-    "spam_mass",
-    "tokenizer_fertility",
-    "host_quality_rollup",
-    "ivf_kmeans_train",
-    "surprisal_transfer",
-    "warc_revisit",
-    "e2e_warc_dedup",
-    "meta_robots_gate",
-    "license_detect",
-    "compliance_rollup",
-    "markdown_outline",
-]
-
 
 def replicated_pages(spark, sf_dir: str, factor: int, text_mult: int | None = None):
     """Deterministically replicate the documents table (offset ids) and
@@ -280,17 +112,17 @@ def main() -> None:
     timings["pipeline_extract"] = pipeline_sec
     pages.unpersist()
 
-    for name in HEADLINE_QUERIES:
-        qd = REGISTRY[name]
+    for name, qd in REGISTRY.items():
         timings[name] = timed(lambda: qd.spark(spark, sf_dir))
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     full = {
-        "metric": "total wall sec, extraction pipeline + headline operators",
+        "metric": "total wall sec, extraction pipeline + registry operators",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "pipeline_extract_replicates": "extract_pipeline",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "pipeline_docs": n_docs,
         "docs_per_sec": round(n_docs / pipeline_sec, 2),

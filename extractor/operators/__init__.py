@@ -39,7 +39,6 @@
                     tombstones / streaming fold, conjunctive +
                     phrase + ranked retrieval, KWIC snippets, df
                     histogram index stats, Dice collocation mining
-* ``funnel``      — K-step ordered funnels, retention cohorts
 * ``textstats``   — language-ID, quality scoring (Gopher rules,
                     unigram + conditional-bigram surprisal, CCNet
                     terciles), token counting, document
@@ -51,8 +50,6 @@
                     training shards
 * ``topk``        — bounded per-group top-k (the window-free
                     sample/vocab/sketch building block)
-* ``joins``       — as-of join and time-range join in their
-                    equi-join-shaped scale formulations
 * ``multimodal``  — binary-column compress/resize (PIL-gated, stub
                     fallback), frame sampling, pseudo-embeddings
 

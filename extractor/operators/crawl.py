@@ -720,19 +720,23 @@ def meta_robots_flags(
     has no corpus-policy layer (one upload in, one result out,
     `routes/ocr.py`); this is its batch-governance analog.
 
-    Parsing is deliberately tag-scoped: extract the first
-    ``<meta ... name="robots" ...>`` tag (attribute order free), then
-    word-boundary-match directives inside the tag and the header
-    only — a page whose BODY discusses "noindex" is not opted out.
-    ``none`` implies ``noindex`` + ``nofollow`` (robots spec).
+    Parsing is deliberately tag-scoped: extract EVERY
+    ``<meta ... name=robots ...>`` tag (attribute order free, name
+    quoted or not — directives split across several tags all count),
+    then word-boundary-match directives inside the tags and the
+    header only — a page whose BODY discusses "noindex" is not opted
+    out.  ``none`` implies ``noindex`` + ``nofollow`` (robots spec).
 
-    Expression-only (lower + one regexp_extract + rlike per
+    Expression-only (lower + one regexp_extract_all + rlike per
     directive): map-only at any scale, no shuffle, stays inside
     whole-stage codegen."""
-    tag = F.regexp_extract(
-        F.lower(F.col(html_col)),
-        r"""<meta[^>]*name=["']robots["'][^>]*>""",
-        0,
+    tag = F.array_join(
+        F.regexp_extract_all(
+            F.lower(F.col(html_col)),
+            F.lit(r"""<meta[^>]*name=["']?robots\b[^>]*>"""),
+            F.lit(0),
+        ),
+        " ",
     )
     hdr = (
         F.coalesce(F.lower(F.col(header_col)), F.lit(""))

@@ -1,5 +1,5 @@
-"""Operator-query registry: 163 Spark queries, each paired with a
-DuckDB oracle (``QueryDef.sql``) where SQL-expressible
+"""Operator-query registry: Spark queries over pages and documents,
+each paired with a DuckDB oracle (``QueryDef.sql``) where SQL-expressible
 (``compression_ratio`` is the one deliberate rows-only entry).
 
 Split by tier (r4 VERDICT item 2) from the former single-module
@@ -16,10 +16,9 @@ from extractor.queries._core import (  # noqa: F401
 
 # Tier modules self-register on import.  Registration lands
 # tier-grouped; _apply_driver_gate_order below then pins the first 50
-# (the driver-graded set — SURVEY §12.1).  The name SET is identical
-# to the pre-split monolith's (pinned by test_registry_tier_split).
+# (the driver-graded set — SURVEY §12.1; pinned by
+# test_registry_tier_split).
 from extractor.queries import extraction  # noqa: E402,F401
-from extractor.queries import analytics  # noqa: E402,F401
 from extractor.queries import dedup  # noqa: E402,F401
 from extractor.queries import similarity  # noqa: E402,F401
 from extractor.queries import quality  # noqa: E402,F401

@@ -33,12 +33,6 @@ def register(name: str, sql: Optional[str]):
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 

@@ -1,4 +1,4 @@
-"""Crawl-lifecycle tier: robots, sitemaps, canonicalization, redirects, recrawl scheduling, churn, discovery e2e."""
+"""Crawl-lifecycle tier: robots, sitemaps, canonicalization, redirects, recrawl scheduling, churn, URL-space traps, discovery e2e."""
 
 from __future__ import annotations
 
@@ -1382,7 +1382,9 @@ def q_robots_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # any implementation that greps the whole document instead of the
     # robots meta tag fails every row.  Residues: %5 noindex+nofollow
     # tag, %7 reversed-attribute noai tag, %13 content="none"
-    # (implies noindex+nofollow), %11 X-Robots-Tag header.
+    # (implies noindex+nofollow), %17 directives split over two tags
+    # (index, then noai), %19 unquoted name=robots, %11 X-Robots-Tag
+    # header.
     """
     WITH pages AS (
       SELECT 'https://m.test/' || doc_id::VARCHAR AS url,
@@ -1393,6 +1395,11 @@ def q_robots_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
                   THEN '<meta content="noai,noimageai" name="robots">'
                   WHEN doc_id % 13 = 0
                   THEN '<meta name="robots" content="none">'
+                  WHEN doc_id % 17 = 0
+                  THEN '<meta name="robots" content="index">'
+                       || '<meta name="robots" content="noai">'
+                  WHEN doc_id % 19 = 0
+                  THEN '<meta name=robots content=noindex>'
                   ELSE '' END ||
              '</head><body>noindex discussion ' || text
              || '</body></html>' AS html,
@@ -1400,8 +1407,9 @@ def q_robots_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     ), sig AS (
       SELECT url,
-             regexp_extract(lower(html),
-               '<meta[^>]*name="robots"[^>]*>', 0)
+             -- array_to_string of an empty list is NULL in DuckDB
+             coalesce(array_to_string(regexp_extract_all(lower(html),
+               '<meta[^>]*name=["'']?robots\\b[^>]*>', 0), ' '), '')
                || ' | ' || coalesce(lower(x_robots), '') AS s
       FROM pages
     ), fl AS (
@@ -1429,7 +1437,8 @@ def q_meta_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-directive booleans and the ``keep_for_training`` verdict a
     compliant pipeline applies AFTER the crawl (robots.txt only
     governs fetching).  The fixture plants the tag in both attribute
-    orders, the ``none`` alias, a header-only case — and the word
+    orders, the ``none`` alias, directives split over two tags, an
+    unquoted ``name=robots``, a header-only case — and the word
     "noindex" in every BODY, so tag-scoped parsing is load-bearing,
     not cosmetic.  Map-only, expression-only: no shuffle at any
     scale."""
@@ -1442,6 +1451,10 @@ def q_meta_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(d % 7 == 0,
               F.lit('<meta content="noai,noimageai" name="robots">'))
         .when(d % 13 == 0, F.lit('<meta name="robots" content="none">'))
+        .when(d % 17 == 0,
+              F.lit('<meta name="robots" content="index">'
+                    '<meta name="robots" content="noai">'))
+        .when(d % 19 == 0, F.lit("<meta name=robots content=noindex>"))
         .otherwise(F.lit(""))
     )
     pages = _docs(spark, sf_dir).select(
@@ -1571,8 +1584,9 @@ def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     ), sig AS (
       SELECT doc_id, text,
-             regexp_extract(lower(html),
-               '<meta[^>]*name="robots"[^>]*>', 0) AS tag,
+             coalesce(array_to_string(regexp_extract_all(lower(html),
+               '<meta[^>]*name=["'']?robots\\b[^>]*>', 0), ' '), '')
+               AS tag,
              regexp_extract(lower(html),
                'creativecommons\\.org/licenses/([a-z-]+)/([0-9][0-9.]*)', 1)
                AS code0
@@ -1669,3 +1683,60 @@ def q_compliance_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("kept"), F.col("n_words"))), F.lit(0)
         ).alias("words_kept"),
     )
+
+@register(
+    "query_traps",
+    """
+    -- faceted/session-id URL-space explosion per (host, path): the
+    -- %3=0 path carries doc-distinct query variants (the trap), the
+    -- %3=1 path repeats ONE query (benign), the rest are bare
+    WITH u AS (
+      SELECT doc_id,
+             'h' || (doc_id % 9) AS hn,
+             doc_id % 3 AS cls
+      FROM documents
+    ), rows_ AS (
+      SELECT hn || '.shop.test' AS host,
+             CASE cls WHEN 0 THEN '/search' WHEN 1 THEN '/list'
+                      ELSE '/about' END AS path,
+             CASE cls WHEN 0 THEN 'q=' || doc_id::VARCHAR || '&page='
+                                  || (doc_id % 5)::VARCHAR
+                      WHEN 1 THEN 'sort=price' ELSE '' END AS query
+      FROM u
+    )
+    SELECT host, path, count(*)::BIGINT AS n_urls,
+           count(DISTINCT query)::BIGINT AS n_variants,
+           sum(CASE WHEN query <> '' THEN 1 ELSE 0 END)::BIGINT
+             AS with_query
+    FROM rows_ GROUP BY 1, 2
+    """,
+)
+def q_query_traps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Query-parameter trap detection
+    (operators.crawl.query_variant_stats): per (host, path), distinct
+    query-string variants — the '/search?q=…&page=…' URL-space
+    explosion that floods a frontier with one page's worth of
+    content; the %3=0 class plants doc-distinct variants (the trap
+    signature: n_variants ≈ n_urls), the %3=1 class repeats one
+    query (benign: n_variants = 1), bare paths count the empty
+    variant.  Map-only split, one aggregate; the oracle restates the
+    classes arithmetically."""
+    from extractor.operators.crawl import query_variant_stats
+
+    d = F.col("doc_id")
+    host = F.concat(F.lit("h"), (d % 9).cast("string"), F.lit(".shop.test"))
+    url = F.concat(
+        F.lit("https://"),
+        host,
+        F.when(
+            d % 3 == 0,
+            F.concat(
+                F.lit("/search?q="), d.cast("string"),
+                F.lit("&page="), (d % 5).cast("string"),
+            ),
+        )
+        .when(d % 3 == 1, F.lit("/list?sort=price"))
+        .otherwise(F.lit("/about")),
+    )
+    urls = _docs(spark, sf_dir).select(url.alias("url"))
+    return query_variant_stats(urls)

@@ -1,4 +1,4 @@
-"""Mixture/packing tier: source mixing, drift, host caps, sequence packing, shard manifests, chunking."""
+"""Mixture/packing tier: source mixing, drift, host caps, sequence packing, shard manifests, chunking, corpus rollups."""
 
 from __future__ import annotations
 
@@ -699,4 +699,38 @@ def q_host_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).when(
             (F.col("mean_bp") < 990) | (F.col("keep_frac_pm") < 250), "block"
         ).otherwise("review").alias("verdict"),
+    )
+
+@register(
+    "corpus_rollup",
+    """
+    SELECT coalesce(lang, '<all>') AS lang,
+           coalesce(source, '<all>') AS source,
+           count(*) AS n_docs,
+           sum(n_chars)::BIGINT AS total_chars,
+           grouping(lang) + 2 * grouping(source) AS grp
+    FROM documents
+    GROUP BY ROLLUP (lang, source)
+    """,
+)
+def q_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-granularity corpus accounting in ONE pass: per (lang,
+    source), per lang, and grand total via ROLLUP — one shuffle
+    computes all three levels (vs three separate aggregations), the
+    standard shape for corpus-composition dashboards at 10^12 docs."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return (
+        docs.rollup("lang", "source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+            (F.grouping("lang") + F.grouping("source") * 2).alias("grp"),
+        )
+        .select(
+            F.coalesce(F.col("lang"), F.lit("<all>")).alias("lang"),
+            F.coalesce(F.col("source"), F.lit("<all>")).alias("source"),
+            "n_docs",
+            "total_chars",
+            F.col("grp").cast("long").alias("grp"),
+        )
     )

@@ -14,13 +14,6 @@ pages table, however, is naturally a stream, so the engine provides:
   compaction job performs the url-level reassembly — the same
   groupBy code path as the batch pipeline, so no second implementation
   to keep correct.
-* :func:`streaming_windowed_events` — tumbling-window aggregation with
-  a watermark for late data (the streaming twin of the batch
-  ``events_windowed`` query, same expressions).
-* :func:`streaming_running_user_totals` — custom stateful operator via
-  ``applyInPandasWithState``: per-user running totals carried across
-  micro-batches (GroupState), the canonical Spark pattern for state
-  the built-in aggregates can't express.
 
 Invariant tested in tests/test_streaming.py: on a finite input the
 streaming results equal the batch results (stream-batch unification).
@@ -28,12 +21,8 @@ streaming results equal the batch results (stream-batch unification).
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from extractor.config import ExtractConfig
 from extractor.pipeline import (
@@ -247,7 +236,10 @@ def streaming_exact_dedup(
 
     In a production crawl this sits FIRST: the cheap gate that stops
     re-crawled unchanged pages and mirrors from ever reaching
-    extraction, fuzzy dedup, or indexing."""
+    extraction, fuzzy dedup, or indexing.  Unlike the
+    watermark-bounded :func:`streaming_dedup_exact`, which forgets a
+    digest once it leaves the watermark horizon, this gate checks the
+    full committed history, at the cost of a digest index on disk."""
     from extractor.operators.incremental import (
         commit_digests,
         incremental_exact_dedup,
@@ -269,61 +261,6 @@ def streaming_exact_dedup(
     return handle
 
 
-def streaming_windowed_events(events_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Tumbling 1h window per event_type with late-data watermark —
-    identical expressions to the batch ``events_windowed`` oracle
-    query."""
-    # watermarks require TIMESTAMP (LTZ); parquet NTZ → LTZ is exact
-    # under the session's pinned UTC timezone
-    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events_stream.withWatermark("ts", watermark)
-        # group by the WINDOW STRUCT, not window(...).start: grouping
-        # by a plain projection of the window severs the watermark
-        # from the aggregation (Spark sees a watermarkless streaming
-        # agg → append mode rejected, state never evicted); the start
-        # column is projected AFTER the aggregate.
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w").start.alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def streaming_sessionized_events(
-    events_stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Gap-based sessions on a stream via ``session_window`` — the
-    stateful operator that replaces the batch lag+running-sum
-    formulation (which needs a full per-user sort, impossible on an
-    unbounded stream).  State is one open window per (user, session),
-    merged as events arrive and closed when the gap exceeds ``gap``.
-    The watermark is what lets the store actually EVICT closed
-    sessions (and enables append mode); without it every open window
-    of every user lives in state forever.  Events later than
-    ``watermark`` are dropped — size it to the source's real
-    out-of-orderness."""
-    es = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        es.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w").start.alias("session_start"),
-            F.col("w").end.alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def streaming_dedup_exact(
     pages_stream: DataFrame, watermark: str = "2 hours"
 ) -> DataFrame:
@@ -335,49 +272,17 @@ def streaming_dedup_exact(
     (arrival rate × horizon) instead of growing with the corpus: the
     property that makes continuous-crawl dedup feasible at 10^12 docs
     (a full-history exact dedup belongs in the periodic batch
-    compaction, same as document reassembly)."""
+    compaction, same as document reassembly).  Its index-backed
+    sibling :func:`streaming_exact_dedup` keeps full history instead:
+    use this one when only recent duplicates matter and state must
+    stay bounded, that one when a re-crawl months later must still be
+    caught."""
     ts = pages_stream.withColumn("ts", F.col("warc_ts").cast("timestamp"))
     return (
         ts.withWatermark("ts", watermark)
         .withColumn("text_hash", F.md5(F.coalesce(F.col("text"), F.lit(""))))
         .dropDuplicatesWithinWatermark(["text_hash"])
         .select("url", "ts", "text_hash")
-    )
-
-
-_STATE_SCHEMA = "total double, n long"
-_OUT_SCHEMA = "user_id long, running_total double, n_events long"
-
-
-def _running_totals_fn(
-    key: Tuple[int], batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        total, n = state.get
-    else:
-        total, n = 0.0, 0
-    for pdf in batches:
-        total += float(pdf["value"].sum())
-        n += int(len(pdf))
-    state.update((total, n))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "running_total": [round(total, 2)], "n_events": [n]}
-    )
-
-
-def streaming_running_user_totals(events_stream: DataFrame) -> DataFrame:
-    """Custom stateful operator: per-user running totals across
-    micro-batches via applyInPandasWithState (GroupState)."""
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _running_totals_fn,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
     )
 
 
@@ -658,11 +563,18 @@ def streaming_revisit_gate(
     (to_deduped_warc_records' streaming half) and its payload never
     enters storage, extraction, or dedup.
 
+    Replay contract: a batch re-run after its index commit finds its
+    own canonicals in the index and classifies them ``response``
+    again, so every (url, warc_date) keeps one classification across
+    the appended rows.
+
     Scale shape per batch: digest + byte count in the scan
     projection (payload bytes never ride a shuffle), one
     groupBy(digest) over the batch, one digest equi-join against the
-    committed index (history never self-joins) — O(|batch|),
-    independent of archive size."""
+    committed index (history never self-joins).  The index scan still
+    reads every committed digest, but it is semi-joined to the
+    batch's digests before its min-aggregate, so only digests the
+    batch touches are shuffled and aggregated."""
     from extractor.operators.incremental import commit_digests
     from extractor.writer import (
         _committed_manifests,
@@ -686,6 +598,7 @@ def streaming_revisit_gate(
         if _committed_manifests(index_dir):
             hist = (
                 read_extracted(spark, index_dir)
+                .join(bcanon.select("digest"), "digest", "left_semi")
                 .groupBy("digest")
                 .agg(F.min(F.struct("warc_date", "url")).alias("hk"))
             )
@@ -705,8 +618,7 @@ def streaming_revisit_gate(
         canon = canon.localCheckpoint(eager=True)  # results + commit reuse
         joined = d.join(canon, "digest")
         is_canon = (
-            (~F.col("in_hist"))
-            & (F.col("warc_date") == F.col("k.warc_date"))
+            (F.col("warc_date") == F.col("k.warc_date"))
             & (F.col("url") == F.col("k.url"))
         )
         res = joined.select(

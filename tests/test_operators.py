@@ -128,30 +128,6 @@ def test_compress_image_passthrough_on_undecodable():
     assert out == payload and (w, h) == (640, 480) and (ow, oh) == (640, 480)
 
 
-def test_asof_join_carries_matched_row_atomically(spark):
-    """A matched right row with a NULL value column must yield NULL for
-    that column — never a backfill from an OLDER right row (the output
-    would be a composite of two different right rows)."""
-    import datetime as dt
-
-    from extractor.operators.joins import asof_join
-
-    t = lambda s: dt.datetime(2026, 1, 1, 0, 0, s)  # noqa: E731
-    left = spark.createDataFrame([("k", t(10))], ["k", "ts"])
-    right = spark.createDataFrame(
-        [("k", t(1), "old_a", "old_b"), ("k", t(5), None, "new_b")],
-        ["k", "ts", "a", "b"],
-    )
-    out = asof_join(
-        left, right, by=["k"], on="ts", value_cols={"a": "a", "b": "b"}
-    ).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["ts_right"] == t(5)
-    assert r["b"] == "new_b"
-    assert r["a"] is None, "NULL cell backfilled from an older right row"
-
-
 def test_minhash_properties(spark):
     from extractor.operators.dedup import minhash_signatures
 
@@ -578,61 +554,6 @@ def test_srp_multiband_recall_at_cos95(spark):
     assert r4 > r1 + 0.15, f"amplification gain too small: {r1} -> {r4}"
 
 
-def test_funnel_k_independence_and_naive_equivalence(spark):
-    """K-independence (pattern: grouped_topk's B-independence): a
-    K-step funnel truncated to its first k columns must equal the
-    k-step funnel run directly — stage i's result may not depend on
-    the stages after it.  Plus a seeded naive equivalence: the
-    operator matches a per-user driver-side scan."""
-    import random
-
-    from extractor.operators.funnel import funnel
-
-    rng = random.Random(11)
-    types = ["a", "b", "c", "d"]
-    rows = [
-        (f"u{rng.randrange(40)}", rng.choice(types), rng.randrange(1000))
-        for _ in range(2000)
-    ]
-    ev = spark.createDataFrame(rows, "user_id: string, event_type: string, ts: long")
-    steps = ["a", "b", "c", "d"]
-
-    def naive(upto: int):
-        out = {}
-        per_user: dict = {}
-        for u, t, ts in rows:
-            per_user.setdefault(u, []).append((t, ts))
-        for u, evs in per_user.items():
-            tcols, prev = [], None
-            for s in steps[:upto]:
-                cand = [ts for t, ts in evs if t == s and (prev is None or ts > prev)]
-                if not cand or (tcols and tcols[-1] is None):
-                    tcols.append(None)
-                else:
-                    prev = min(cand)
-                    tcols.append(prev)
-            if tcols[0] is None:
-                continue
-            reached = max(i + 1 for i, t in enumerate(tcols) if t is not None)
-            out[u] = (tuple(tcols), reached)
-        return out
-
-    full = {
-        r["user_id"]: (tuple(r[f"t{i}"] for i in range(1, 5)), r["steps"])
-        for r in funnel(ev, steps).collect()
-    }
-    assert full == naive(4)
-    for k in (1, 2, 3):
-        got = {
-            r["user_id"]: (tuple(r[f"t{i}"] for i in range(1, k + 1)), r["steps"])
-            for r in funnel(ev, steps[:k]).collect()
-        }
-        truncated = {
-            u: (ts[:k], min(s, k)) for u, (ts, s) in full.items()
-        }
-        assert got == truncated, f"k={k}"
-
-
 def test_pagerank_dangling_modes(spark):
     """redistribute must conserve total rank mass (modulo integer
     truncation) where drop leaks it: on a star graph a->b, a->c (b, c
@@ -797,48 +718,6 @@ def test_crawl_novelty_first_occurrence(spark):
         for r in crawl_novelty(caps).collect()
     }
     assert got == {0: (2, 2, 10000), 1: (2, 1, 5000), 2: (3, 0, 0)}
-
-
-def test_retention_cohorts_naive_equivalence(spark):
-    """Seeded naive replay: the distributed cohort matrix equals a
-    driver-side recompute over the same synthetic events; offset-0
-    rows equal cohort sizes; a user active twice in one bucket counts
-    once."""
-    import datetime as dt
-    import random
-
-    from extractor.operators.funnel import retention_cohorts
-
-    rng = random.Random(7)
-    rows = []
-    for uid in range(40):
-        start = rng.randrange(0, 21)
-        for _ in range(rng.randrange(1, 8)):
-            day = start + rng.randrange(0, 28)
-            rows.append(
-                (uid, dt.datetime(2024, 1, 1) + dt.timedelta(days=day, hours=uid % 24))
-            )
-    # duplicate activity inside one bucket must count once
-    rows.append((0, rows[0][1] + dt.timedelta(hours=1)))
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    got = {
-        (r["cohort_week"], r["week_offset"]): r["n_users"]
-        for r in retention_cohorts(df).collect()
-    }
-    # naive replay
-    epoch = dt.date(1970, 1, 1)
-    active: dict[int, set] = {}
-    for uid, ts in rows:
-        active.setdefault(uid, set()).add((ts.date() - epoch).days // 7)
-    want: dict[tuple, int] = {}
-    for uid, weeks in active.items():
-        c = min(weeks)
-        for w in weeks:
-            want[(c, w - c)] = want.get((c, w - c), 0) + 1
-    assert got == want
-    sizes = {c: n for (c, off), n in want.items() if off == 0}
-    assert all(got[(c, 0)] == n for c, n in sizes.items())
-    assert sum(sizes.values()) == len(active)
 
 
 def test_strip_template_lines(spark):
@@ -3194,10 +3073,10 @@ def test_surprisal_transfer_oov_and_ordering(spark):
 
 
 def test_meta_robots_flags_tag_scoped(spark):
-    """Directives come from the robots meta tag + X-Robots-Tag header
+    """Directives come from the robots meta tags + X-Robots-Tag header
     ONLY — a body discussing "noindex" is not opted out; attribute
-    order is free; 'none' implies noindex+nofollow; noai blocks
-    keep_for_training."""
+    order is free; every robots tag counts, quoted or not; 'none'
+    implies noindex+nofollow; noai blocks keep_for_training."""
     from extractor.operators.crawl import meta_robots_flags
 
     pages = spark.createDataFrame(
@@ -3208,6 +3087,11 @@ def test_meta_robots_flags_tag_scoped(spark):
             ("u3", '<head><meta content="noai" name="robots"></head>', None),
             ("u4", "<body>plain</body>", "noarchive, noimageai"),
             ("u5", '<head><meta name="robots" content="none"></head>', None),
+            ("u6", '<head><meta name="robots" content="index">'
+                   '<meta name="robots" content="noai"></head>', None),
+            ("u7", "<head><meta name=robots content=noindex></head>", None),
+            ("u8", '<head><meta name="robotsx" content="noindex"></head>',
+             None),
         ],
         "url string, html string, x_robots string",
     )
@@ -3219,6 +3103,10 @@ def test_meta_robots_flags_tag_scoped(spark):
     assert got["u4"].noarchive and got["u4"].noimageai  # header-only
     assert got["u4"].keep_for_training  # neither noindex nor noai
     assert got["u5"].noindex and got["u5"].nofollow  # none alias
+    # every robots tag counts, not only the first
+    assert got["u6"].noai and not got["u6"].keep_for_training
+    assert got["u7"].noindex  # unquoted name=robots
+    assert not got["u8"].noindex  # another meta name
 
 
 def test_detect_license_url_anchored(spark):

@@ -17,10 +17,7 @@ import pytest
 from extractor.queries import REGISTRY
 from tests.conftest import SF_SMALL
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "embeddings"]
 
 
 def duck_con(sf_dir: str):
