@@ -317,7 +317,11 @@ def _pdf_ocr_iter(cfg: ExtractConfig):
     return fn
 
 
-def extract_pdf(valid_pdf: DataFrame, cfg: ExtractConfig) -> DataFrame:
+def extract_pdf_pages(valid_pdf: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """pdf docs → page-grain OCR rows (PDF_PAGE_TEXT_SCHEMA); doc-level
+    errors pass through as one row with a null page_number.  The
+    streaming plane emits these rows as they are; batch reassembles
+    them in :func:`extract_pdf`."""
     df = valid_pdf.select("url", "warc_ts", "html")
     # Explode first (cheap byte slicing)…
     pages = df.mapInPandas(_pdf_explode_iter(cfg), schema=PDF_PAGE_SCHEMA)
@@ -327,8 +331,11 @@ def extract_pdf(valid_pdf: DataFrame, cfg: ExtractConfig) -> DataFrame:
         "spark.sql.shuffle.partitions"
     )
     pages = pages.repartition(int(n_parts), "url", "page_number")
-    page_text = pages.mapInPandas(_pdf_ocr_iter(cfg), schema=PDF_PAGE_TEXT_SCHEMA)
-    return reassemble_pages(page_text)
+    return pages.mapInPandas(_pdf_ocr_iter(cfg), schema=PDF_PAGE_TEXT_SCHEMA)
+
+
+def extract_pdf(valid_pdf: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    return reassemble_pages(extract_pdf_pages(valid_pdf, cfg))
 
 
 def reassemble_pages(page_text: DataFrame) -> DataFrame:

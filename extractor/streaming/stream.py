@@ -17,24 +17,77 @@ pages table, however, is naturally a stream, so the engine provides:
 
 Invariant tested in tests/test_streaming.py: on a finite input the
 streaming results equal the batch results (stream-batch unification).
+
+Replay contract of the snapshot-writing foreachBatch bridges
+(:func:`streaming_incremental_dedup`, :func:`streaming_exact_dedup`,
+:func:`streaming_index_maintenance`, :func:`streaming_crawl_pipeline`,
+:func:`streaming_revisit_gate`).  Spark re-runs a micro-batch under
+the same batch id when the query dies before its checkpoint commit,
+and a handler can die between two of its own writes.  Every such
+bridge commits through one step, :func:`_exactly_once`:
+
+* all snapshots of a batch share one ``run_id`` derived from
+  ``(query id, batch id)``; the query id is stable across restarts
+  from the same checkpoint (and empty for a handler called directly,
+  so the batch id alone names the batch);
+* outputs are committed first and the index advance last, so a crash
+  between them replays against an unchanged index;
+* on replay a snapshot whose manifest exists is skipped, and a batch
+  whose index advance is committed returns before classifying, since
+  a classification against an index that already holds the batch is
+  wrong.  "Committed" is the manifest file, not the live view: a later
+  compaction or expiry hides the snapshot but keeps its manifest.
+
+A replayed batch, in either crash window, therefore leaves the same
+row multiset as a clean run (pinned by tests/test_streaming.py).
+:func:`streaming_cdx_maintenance` is the exception; its docstring
+says why.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from extractor.config import ExtractConfig
 from extractor.pipeline import (
-    PDF_PAGE_TEXT_SCHEMA,
-    _pdf_explode_iter,
-    _pdf_ocr_iter,
     _quarantine_error,
     extract_html,
     extract_image,
+    extract_pdf_pages,
     route,
 )
-from extractor.schema import PAGES_SCHEMA, PDF_PAGE_SCHEMA
+from extractor.schema import PAGES_SCHEMA
+from extractor.writer import (
+    _committed_manifests,
+    _is_committed,
+    read_extracted,
+    write_snapshot,
+)
+
+
+def _exactly_once(plan, index_dir: str | None = None):
+    """The commit step of every snapshot-writing bridge (module
+    docstring, "Replay contract").  ``plan(batch_df)`` returns the
+    batch's writes as ``(df, out_dir, key_col)`` in commit order:
+    outputs first, the advance of ``index_dir`` (the state the plan
+    reads back, if any) last.  Returns the handler for
+    ``stream.writeStream.foreachBatch(...)``."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        sc = batch_df.sparkSession.sparkContext
+        query_id = sc.getLocalProperty("sql.streaming.queryId") or ""
+        run_id = hashlib.md5(f"{query_id}:{batch_id}".encode()).hexdigest()[:12]
+        if index_dir is not None and _is_committed(index_dir, run_id):
+            return
+        for df, out_dir, key_col in plan(batch_df):
+            write_snapshot(df, out_dir, run_id=run_id, key_col=key_col)
+
+    return handle
 
 
 def read_pages_stream(spark: SparkSession, pages_dir: str, max_files: int = 4) -> DataFrame:
@@ -77,22 +130,11 @@ def streaming_extract_pages(
         "success",
         "error",
     )
-    n_parts = cfg.pdf_partitions or pages_stream.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    pdf_pages = (
-        valid.filter(F.col("doc_type") == "pdf")
-        .select("url", "warc_ts", "html")
-        .mapInPandas(_pdf_explode_iter(cfg), schema=PDF_PAGE_SCHEMA)
-        # page-level salting, same as the batch branch: a micro-batch
-        # containing one giant PDF must not OCR serially in the task
-        # that exploded it (repartition is supported on streams)
-        .repartition(int(n_parts), "url", "page_number")
-        .mapInPandas(_pdf_ocr_iter(cfg), schema=PDF_PAGE_TEXT_SCHEMA)
-        .select(
-            "url", "warc_ts", F.lit("pdf").alias("doc_type"),
-            "page_number", "text", "success", "error",
-        )
+    pdf_pages = extract_pdf_pages(
+        valid.filter(F.col("doc_type") == "pdf"), cfg
+    ).select(
+        "url", "warc_ts", F.lit("pdf").alias("doc_type"),
+        "page_number", "text", "success", "error",
     )
     quarantined = routed.filter(F.col("route_error").isNotNull()).select(
         "url",
@@ -145,6 +187,13 @@ def streaming_outlinks(
     return html_outlinks(valid_html)
 
 
+def _extracted_html(pages_stream: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """The successfully extracted html rows of
+    :func:`streaming_extract_pages` — what every ingest gate scores."""
+    extracted = streaming_extract_pages(pages_stream, cfg)
+    return extracted.filter((F.col("doc_type") == "html") & F.col("success"))
+
+
 def streaming_quality_gate(
     pages_stream: DataFrame,
     cfg: ExtractConfig = ExtractConfig(),
@@ -159,12 +208,8 @@ def streaming_quality_gate(
     implementation; pinned by tests/test_streaming.py)."""
     from extractor.operators.textstats import gopher_rules
 
-    extracted = streaming_extract_pages(pages_stream, cfg)
-    html_ok = extracted.filter(
-        (F.col("doc_type") == "html") & F.col("success")
-    )
     r = gopher_rules(F.col("text"), stopwords=stopwords)
-    return html_ok.select(
+    return _extracted_html(pages_stream, cfg).select(
         "url", "warc_ts", *[r[k].alias(k) for k in r]
     )
 
@@ -182,10 +227,8 @@ def streaming_incremental_dedup(
     """foreachBatch bridge from a document stream to the committed
     incremental-dedup index (operators.incremental): every micro-batch
     computes band signatures ONCE, probes new×new and new×history,
-    snapshot-commits the PAIRS first and only then advances the index
-    (``commit_band_rows``) — the exactly-once order, so a crash
-    between the two commits re-runs the batch against an unchanged
-    index and overwrites nothing.  Returns the handler for
+    commits the PAIRS and then advances the index with the batch's
+    band rows.  Returns the handler for
     ``stream.writeStream.foreachBatch(...)``; the accumulated pair
     snapshots read back with ``writer.read_extracted(pairs_dir)`` and
     equal the one-shot ``lsh_pairs`` over everything ingested
@@ -195,23 +238,16 @@ def streaming_incremental_dedup(
     per-crawl cost O(batch), and the index the batches build is the
     same table the batch engine probes."""
     from extractor.operators.dedup import banded_signatures
-    from extractor.operators.incremental import (
-        commit_band_rows,
-        incremental_pairs,
-    )
-    from extractor.writer import write_snapshot
+    from extractor.operators.incremental import incremental_pairs
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def plan(batch_df: DataFrame):
         banded = banded_signatures(
             batch_df, id_col=id_col, text_col=text_col, k=k, bands=bands
         ).localCheckpoint(eager=True)
         pairs = incremental_pairs(banded, index_dir, k=k, threshold=threshold)
-        write_snapshot(pairs, pairs_dir, key_col="a")
-        commit_band_rows(banded, index_dir)
+        return [(pairs, pairs_dir, "a"), (banded, index_dir, "id")]
 
-    return handle
+    return _exactly_once(plan, index_dir)
 
 
 def streaming_exact_dedup(
@@ -224,15 +260,12 @@ def streaming_exact_dedup(
     """foreachBatch bridge for the exact-digest membership gate
     (operators.incremental.incremental_exact_dedup): every micro-batch
     classifies its docs as new / dup_in_batch / dup_of_history against
-    the committed digest index, snapshot-commits the CLASSIFICATIONS
-    first and only then advances the index with the batch's new
-    digests (``commit_digests``) — the same exactly-once two-step as
-    the LSH bridge, so a crash between the commits replays the batch
-    against an unchanged index.  Returns the handler for
-    ``stream.writeStream.foreachBatch(...)``; accumulated results
-    read back with ``writer.read_extracted(results_dir)`` and match
-    the batched classification over everything ingested (pinned by
-    tests/test_streaming.py).
+    the committed digest index, commits the CLASSIFICATIONS and then
+    advances the index with the batch's new digests.  Returns the
+    handler for ``stream.writeStream.foreachBatch(...)``; accumulated
+    results read back with ``writer.read_extracted(results_dir)`` and
+    match the batched classification over everything ingested (pinned
+    by tests/test_streaming.py).
 
     In a production crawl this sits FIRST: the cheap gate that stops
     re-crawled unchanged pages and mirrors from ever reaching
@@ -240,25 +273,16 @@ def streaming_exact_dedup(
     watermark-bounded :func:`streaming_dedup_exact`, which forgets a
     digest once it leaves the watermark horizon, this gate checks the
     full committed history, at the cost of a digest index on disk."""
-    from extractor.operators.incremental import (
-        commit_digests,
-        incremental_exact_dedup,
-    )
-    from extractor.writer import write_snapshot
+    from extractor.operators.incremental import incremental_exact_dedup
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def plan(batch_df: DataFrame):
         res = incremental_exact_dedup(
             batch_df, index_dir, id_col=id_col, text_col=text_col, commit=False
         ).localCheckpoint(eager=True)
-        write_snapshot(res, results_dir, key_col="id")
-        commit_digests(
-            res.filter(F.col("status") == "new").select("digest", "id"),
-            index_dir,
-        )
+        new = res.filter(F.col("status") == "new").select("digest", "id")
+        return [(res, results_dir, "id"), (new, index_dir, "digest")]
 
-    return handle
+    return _exactly_once(plan, index_dir)
 
 
 def streaming_dedup_exact(
@@ -296,32 +320,24 @@ def streaming_index_maintenance(
     """foreachBatch bridge for retrieval-index maintenance: each
     micro-batch builds ITS OWN postings
     (operators.relevance.build_postings — batch docs only, history
-    text never re-tokenized) and appends them as one committed
-    snapshot.  Serving reads
+    text never re-tokenized) and commits them as one snapshot.
+    Serving reads
     :func:`extractor.operators.relevance.read_postings_index`, which
     folds the appended snapshots with the GLOBAL max_df cut —
     ``batch_max_df`` stays permissive so a term's corpus-wide promotion
-    to stopword is decided at fold time, not per micro-batch.
-
-    Exactly-once is NOT required on this path (unlike the dedup
-    gates' two-step commits): a crash-replayed batch appends
-    byte-identical entries and the read-side (token, doc) fold
-    collapses them, so the bridge is a single snapshot append —
-    at-least-once is repaired on read, the same discipline as
-    compact_index.  Returns the handler for
+    to stopword is decided at fold time, not per micro-batch.  The
+    postings are an output, not state the batch reads back, so there
+    is no index advance.  Returns the handler for
     ``stream.writeStream.foreachBatch(...)``."""
     from extractor.operators.relevance import build_postings
-    from extractor.writer import write_snapshot
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def plan(batch_df: DataFrame):
         idx = build_postings(
             batch_df, id_col=id_col, text_col=text_col, max_df=batch_max_df
         )
-        write_snapshot(idx, index_dir, key_col="token")
+        return [(idx, index_dir, "token")]
 
-    return handle
+    return _exactly_once(plan)
 
 
 def streaming_crawl_pipeline(
@@ -345,20 +361,15 @@ def streaming_crawl_pipeline(
        quarantine classes (every empty capture shares a digest), so
        the results table holds one row per distinct payload and the
        cls table remembers every url's disposition; classifications
-       snapshot-committed to ``cls_dir`` (the batch's decision
-       record);
+       committed to ``cls_dir`` (the batch's decision record);
     2. extraction of the ``new`` rows only (run_extraction — the
-       same batch stages the spark-submit job runs);
-    3. extracted results snapshot-committed to ``results_dir``;
-    4. digest index advanced (``commit_digests``) — AFTER the
-       results commit, so a crash between them replays the batch
-       against an unchanged index: results/classifications append a
-       second time (at-least-once; compact_snapshots with
-       dedupe_on=['url'] / ['id'] is the repair, as everywhere), but
-       nothing is ever lost or mis-gated;
-    5. per-batch postings appended to ``index_dir`` over the
-       successful html markdown (read via read_postings_index, which
-       repairs replays on fold — no ordering constraint at all).
+       same batch stages the spark-submit job runs), committed to
+       ``results_dir``;
+    3. per-batch postings over the successful html markdown,
+       committed to ``index_dir`` (read via read_postings_index);
+    4. digest index advanced LAST, so a crash anywhere before it
+       replays the batch against an unchanged index and reaches the
+       postings again.
 
     Index doc ids are ``xxhash64(url)`` (postings doc columns are
     longs; the hash is deterministic across batches and engines,
@@ -367,21 +378,13 @@ def streaming_crawl_pipeline(
 
     Returns the handler for ``stream.writeStream.foreachBatch(...)``.
     """
-    from extractor.config import ExtractConfig
-    from extractor.operators.incremental import (
-        commit_digests,
-        incremental_exact_dedup,
-    )
+    from extractor.operators.incremental import incremental_exact_dedup
     from extractor.operators.relevance import build_postings
     from extractor.pipeline import run_extraction
-    from extractor.writer import write_snapshot
 
     cfg = cfg or ExtractConfig()
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def plan(batch_df: DataFrame):
         cls = incremental_exact_dedup(
             batch_df,
             digest_dir,
@@ -389,33 +392,24 @@ def streaming_crawl_pipeline(
             text_col=payload_col,
             commit=False,
         ).localCheckpoint(eager=True)
-        write_snapshot(cls, cls_dir, key_col="id")
-        new_urls = cls.filter(F.col("status") == "new").select(
-            F.col("id").alias(url_col)
-        )
-        fresh = batch_df.join(new_urls, url_col)
+        new = cls.filter(F.col("status") == "new")
+        writes = [(cls, cls_dir, "id")]
+        fresh = batch_df.join(new.select(F.col("id").alias(url_col)), url_col)
         if not fresh.isEmpty():
-            extracted = run_extraction(spark, fresh, cfg).localCheckpoint(
-                eager=True
-            )
-            write_snapshot(extracted, results_dir)
-        commit_digests(
-            cls.filter(F.col("status") == "new").select("digest", "id"),
-            digest_dir,
-        )
-        if fresh.isEmpty():
-            return
-        docs = extracted.filter(
-            (F.col("doc_type") == "html") & F.col("success")
-        ).select(F.xxhash64(url_col).alias("doc_id"), "text")
-        if not docs.isEmpty():
-            write_snapshot(
-                build_postings(docs, max_df=batch_max_df),
-                index_dir,
-                key_col="token",
-            )
+            extracted = run_extraction(
+                batch_df.sparkSession, fresh, cfg
+            ).localCheckpoint(eager=True)
+            writes.append((extracted, results_dir, "url"))
+            docs = extracted.filter(
+                (F.col("doc_type") == "html") & F.col("success")
+            ).select(F.xxhash64(url_col).alias("doc_id"), "text")
+            if not docs.isEmpty():
+                postings = build_postings(docs, max_df=batch_max_df)
+                writes.append((postings, index_dir, "token"))
+        writes.append((new.select("digest", "id"), digest_dir, "digest"))
+        return writes
 
-    return handle
+    return _exactly_once(plan, digest_dir)
 
 
 def streaming_cdx_maintenance(
@@ -429,9 +423,11 @@ def streaming_cdx_maintenance(
     property; a periodic compaction merges shard ranges, exactly like
     real CDX pipelines merge per-crawl indexes).
 
-    Exactly-once is NOT required (same discipline as
-    ``streaming_index_maintenance``): a crash-replayed batch appends
-    byte-identical lines, and the read side —
+    Unlike the other index bridges this one does not commit through
+    :func:`_exactly_once`: the shards are raw CDXJ text files, which
+    ``sources.cdx.read_cdx`` and ``read_cdx_stream`` read as a plain
+    directory, not manifest-committed snapshots.  So a crash-replayed
+    batch appends byte-identical lines, and the read side —
     ``sources.cdx.cdx_latest``'s max(struct) fold, or a ``distinct()``
     for capture-count consumers — collapses them; at-least-once
     repaired on read.  Returns the handler for
@@ -463,23 +459,14 @@ def streaming_classifier_gate(
     (operators.classifier — production registers a pandas-UDF
     fastText and this plan is unchanged), tagging keep/drop at the
     given score threshold.  The learned sibling of
-    :func:`streaming_quality_gate`; stateless map, so stream==batch
-    by construction (one implementation, pinned by pytest).  NULL
-    scores (empty text) tag keep=false — an unscoreable document
-    never rides into the mixture silently."""
-    from extractor.operators.classifier import classifier_score_expr
-
-    extracted = streaming_extract_pages(pages_stream, cfg)
-    html_ok = extracted.filter(
-        (F.col("doc_type") == "html") & F.col("success")
-    )
-    score = classifier_score_expr(F.col("text"), classifier)
-    return html_ok.select(
-        "url",
-        "warc_ts",
-        score.alias("clf_score"),
-        F.coalesce(score >= threshold, F.lit(False)).alias("keep"),
-    )
+    :func:`streaming_quality_gate`, and the classifier columns of
+    :func:`streaming_curation_gate` (column pruning drops the rest);
+    stateless map, so stream==batch by construction (pinned by
+    pytest).  NULL scores (empty text) tag keep=false — an
+    unscoreable document never rides into the mixture silently."""
+    return streaming_curation_gate(
+        pages_stream, cfg, threshold=threshold, classifier=classifier
+    ).select("url", "warc_ts", "clf_score", "keep")
 
 
 def streaming_curation_gate(
@@ -509,12 +496,8 @@ def streaming_curation_gate(
     from extractor.operators.dedup import hex64
     from extractor.operators.textstats import c4_rules
 
-    extracted = streaming_extract_pages(pages_stream, cfg)
-    html_ok = extracted.filter(
-        (F.col("doc_type") == "html") & F.col("success")
-    )
     r = c4_rules(F.col("text"))
-    staged = html_ok.select(
+    staged = _extracted_html(pages_stream, cfg).select(
         "url",
         "warc_ts",
         r["n_kept_lines"].alias("n_kept_lines"),
@@ -548,25 +531,17 @@ def streaming_revisit_gate(
     payload_col: str = "html",
 ):
     """foreachBatch bridge for crawl-time revisit classification
-    (the 15th bridge — sources.warc.classify_revisits with HISTORY):
-    the canonical capture of a payload digest is its first COMMITTED
-    capture; within a micro-batch the type-agnostic
-    ``min(struct(date, url))`` wins, exactly the batch operator's
-    tiebreak.  Every batch snapshot-commits its CLASSIFICATIONS
-    first and only then advances the digest index with the batch's
-    new canonicals — the exactly-once two-step every index bridge
-    uses, so a crash between the commits replays the batch against
-    an unchanged index.
+    (sources.warc.classify_revisits with HISTORY): the canonical
+    capture of a payload digest is its first COMMITTED capture;
+    within a micro-batch the type-agnostic ``min(struct(date, url))``
+    wins, exactly the batch operator's tiebreak.  Every batch commits
+    its CLASSIFICATIONS and then advances the digest index with the
+    batch's new canonicals.
 
     This is the archive writer's ingest gate: a capture classified
     ``revisit`` here is written as a pointer record
     (to_deduped_warc_records' streaming half) and its payload never
     enters storage, extraction, or dedup.
-
-    Replay contract: a batch re-run after its index commit finds its
-    own canonicals in the index and classifies them ``response``
-    again, so every (url, warc_date) keeps one classification across
-    the appended rows.
 
     Scale shape per batch: digest + byte count in the scan
     projection (payload bytes never ride a shuffle), one
@@ -575,16 +550,8 @@ def streaming_revisit_gate(
     reads every committed digest, but it is semi-joined to the
     batch's digests before its min-aggregate, so only digests the
     batch touches are shuffled and aggregated."""
-    from extractor.operators.incremental import commit_digests
-    from extractor.writer import (
-        _committed_manifests,
-        read_extracted,
-        write_snapshot,
-    )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def plan(batch_df: DataFrame):
         spark = batch_df.sparkSession
         d = batch_df.select(
             F.col(url_col).alias("url"),
@@ -637,15 +604,15 @@ def streaming_revisit_gate(
             F.when(is_canon, F.lit(0).cast("long"))
             .otherwise(F.col("nbytes"))
             .alias("saved_bytes"),
-        ).localCheckpoint(eager=True)
-        write_snapshot(res, results_dir, key_col="payload_digest")
-        commit_digests(
-            canon.filter(~F.col("in_hist")).select(
-                "digest",
-                F.col("bk.url").alias("url"),
-                F.col("bk.warc_date").alias("warc_date"),
-            ),
-            index_dir,
         )
+        new_canon = canon.filter(~F.col("in_hist")).select(
+            "digest",
+            F.col("bk.url").alias("url"),
+            F.col("bk.warc_date").alias("warc_date"),
+        )
+        return [
+            (res, results_dir, "payload_digest"),
+            (new_canon, index_dir, "digest"),
+        ]
 
-    return handle
+    return _exactly_once(plan, index_dir)

@@ -135,6 +135,13 @@ def _committed_manifests(out_dir: str, include_replaced: bool = False) -> list[d
     return [m for m in out if m["run_id"] not in replaced]
 
 
+def _is_committed(out_dir: str, run_id: str) -> bool:
+    """Whether ``run_id``'s manifest exists — true for the run's whole
+    life, including after compaction replaced or expiry deleted its
+    data, which the live view of :func:`committed_run_ids` hides."""
+    return os.path.exists(os.path.join(out_dir, "_committed", f"{run_id}.json"))
+
+
 def committed_run_ids(out_dir: str) -> list[str]:
     return [m["run_id"] for m in _committed_manifests(out_dir)]
 
@@ -173,11 +180,18 @@ def write_snapshot(
     (e.g. the incremental dedup index) get NULL ok/err/latency lineage
     instead of failing — row counts and commit atomicity are
     schema-independent.
+
+    An explicit ``run_id`` makes the manifest write idempotent: if
+    that run is already committed (live, compacted away or expired)
+    nothing is written, and a ``snapshots/``/``lineage/`` directory a
+    crash left before the manifest rename is replaced, since no
+    manifest references it.
     """
     if backend not in WRITER_BACKENDS:
         raise ValueError(
             f"unknown writer backend {backend!r} (supported: {WRITER_BACKENDS})"
         )
+    explicit = run_id is not None
     run_id = run_id or new_run_id()
     if backend == "iceberg":
         if not iceberg_table:
@@ -185,6 +199,9 @@ def write_snapshot(
         return _write_snapshot_iceberg(
             df, iceberg_table, run_id, partition_by, key_col=key_col
         )
+    if explicit and _is_committed(out_dir, run_id):
+        return run_id
+    mode = "overwrite" if explicit else "errorifexists"
     spark = df.sparkSession
     data_path = os.path.join(out_dir, "snapshots", run_id)
     lineage_path = os.path.join(out_dir, "lineage", run_id)
@@ -196,7 +213,7 @@ def write_snapshot(
         "lineage_id",
         F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":" + run_id))),
     )
-    writer = with_pid.write.mode("errorifexists")
+    writer = with_pid.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_path)
@@ -233,7 +250,7 @@ def write_snapshot(
             F.current_timestamp().alias("committed_at"),
         )
     )
-    lineage.write.mode("errorifexists").parquet(lineage_path)
+    lineage.write.mode(mode).parquet(lineage_path)
 
     cdir = os.path.join(out_dir, "_committed")
     os.makedirs(cdir, exist_ok=True)

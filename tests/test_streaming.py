@@ -3,9 +3,12 @@ equal the batch results (same expressions, readStream source)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from extractor.config import ExtractConfig
+from extractor.schema import PAGES_SCHEMA
 from extractor.testgen import TEST_MAX_BYTES, pages_df
 from tests.conftest import SF_TINY
 
@@ -751,48 +754,186 @@ def test_streaming_revisit_gate_history_wins(spark, tmp_path):
     assert some and all(v[0] == "revisit" for v in some)
 
 
-def test_streaming_revisit_gate_replay_idempotent(spark, tmp_path):
-    """Crash-window replay: re-running a batch AFTER its index commit
-    re-appends its classification rows and duplicate index rows.
-    Across the full appended row multiset every (url, warc_date) must
-    carry exactly ONE classification — a replayed canonical capture
-    found in the index is still ``response``, never a revisit of
-    itself — and the distinct rows equal a run without the replay
-    (the at-least-once repair for results is the usual keyed dedupe
-    on read)."""
-    from extractor.streaming.stream import streaming_revisit_gate
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _pages(spark, rows):
+    import datetime
+
+    ts = datetime.datetime(2026, 1, 1)
+    return spark.createDataFrame(
+        [(u, ts, bytearray(h.encode()), None, None) for u, h in rows],
+        PAGES_SCHEMA,
+    )
+
+
+_TEXT = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+_DOC_BATCHES = (
+    [(1, _TEXT), (2, _TEXT), (3, "one two three four five")],
+    [(4, _TEXT), (5, "one two three four five"), (6, "red green blue"),
+     (7, "red green blue")],
+)
+_PAGE = "<html><body><h1>{0}</h1><p>{0} is a paragraph of page text.</p></body></html>"
+
+
+def _replay_case(spark, bridge, root):
+    """(handler, b1, b2, index dir or None, every dir the bridge
+    writes) for one snapshot-writing bridge, over a few hand-built
+    rows: in-batch and cross-batch duplicates, so each index is read
+    back by the second batch."""
+    from extractor.streaming import stream
+
+    d = {k: str(root / k) for k in ("out", "idx", "cls", "res", "post")}
+    if bridge in ("incremental_dedup", "exact_dedup", "index_maintenance"):
+        b1, b2 = (_docs(spark, rows) for rows in _DOC_BATCHES)
+        if bridge == "incremental_dedup":
+            h = stream.streaming_incremental_dedup(None, d["idx"], d["out"])
+        elif bridge == "exact_dedup":
+            h = stream.streaming_exact_dedup(None, d["idx"], d["out"])
+        else:
+            return (stream.streaming_index_maintenance(None, d["out"]),
+                    b1, b2, None, [d["out"]])
+        return h, b1, b2, d["idx"], [d["out"], d["idx"]]
+    if bridge == "crawl_pipeline":
+        b1 = _pages(spark, [("https://a.test/x.html", _PAGE.format("Apples")),
+                            ("https://b.test/y.html", _PAGE.format("Apples")),
+                            ("https://c.test/z.html", _PAGE.format("Cherries"))])
+        b2 = _pages(spark, [("https://d.test/m.html", _PAGE.format("Cherries")),
+                            ("https://e.test/n.html", _PAGE.format("Elderberries"))])
+        h = stream.streaming_crawl_pipeline(
+            None, d["cls"], d["idx"], d["res"], d["post"], cfg=CFG
+        )
+        return h, b1, b2, d["idx"], [d["cls"], d["res"], d["post"], d["idx"]]
+    caps = "url string, warc_date string, html string"
+    b1 = spark.createDataFrame(
+        [("http://a.test/", "2026-01-01T00:00:00Z", "same bytes"),
+         ("http://b.test/", "2026-01-01T00:00:01Z", "other")], caps)
+    b2 = spark.createDataFrame(
+        [("http://a.test/", "2026-01-02T00:00:00Z", "same bytes"),
+         ("http://c.test/", "2026-01-02T00:00:01Z", "third")], caps)
+    h = stream.streaming_revisit_gate(None, d["idx"], d["out"])
+    return h, b1, b2, d["idx"], [d["out"], d["idx"]]
+
+
+def _row_multiset(spark, out_dir):
+    """Every committed row of a snapshot table as a multiset, without
+    the columns a re-run legitimately changes."""
+    import collections
+    import json
+
     from extractor.writer import read_extracted
 
-    def caps(rows):
-        return spark.createDataFrame(
-            rows, "url string, warc_date string, html string"
-        )
+    rows = read_extracted(spark, out_dir).drop(
+        "latency_s", "partition_id", "lineage_id"
+    )
+    return collections.Counter(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+        for r in rows.collect()
+    )
 
-    b1 = caps([("http://a.test/", "2026-01-01T00:00:00Z", "same bytes"),
-               ("http://b.test/", "2026-01-01T00:00:01Z", "other")])
-    b2 = caps([("http://a.test/", "2026-01-02T00:00:00Z", "same bytes"),
-               ("http://c.test/", "2026-01-02T00:00:01Z", "third")])
 
-    def run(replay: bool, tag: str):
-        idx = str(tmp_path / f"idx_{tag}")
-        res = str(tmp_path / f"res_{tag}")
-        handle = streaming_revisit_gate(None, idx, res)
+@pytest.fixture(scope="module")
+def clean_runs():
+    """bridge -> row multisets of a clean b1, b2 run (shared by both
+    windows of a bridge)."""
+    return {}
+
+
+@pytest.mark.parametrize(
+    "bridge,window",
+    [(b, w)
+     for b in ("incremental_dedup", "exact_dedup", "index_maintenance",
+               "crawl_pipeline", "revisit_gate")
+     for w in ("a", "b")
+     if (b, w) != ("index_maintenance", "a")],
+)
+def test_bridge_replay_equals_clean_run(
+    spark, tmp_path, monkeypatch, clean_runs, bridge, window
+):
+    """Both crash windows of a snapshot-writing bridge leave exactly a
+    clean run's row multiset in every output and index directory:
+    (a) the index advance fails once after the outputs committed, and
+    the batch is retried; (b) the handler completes and Spark replays
+    the same (batch, batch_id) because it died before its checkpoint
+    commit."""
+    from extractor import writer
+
+    if bridge not in clean_runs:
+        handle, b1, b2, _, dirs = _replay_case(spark, bridge, tmp_path / "clean")
         handle(b1, 0)
-        if replay:
-            handle(b1, 0)  # crash after the index commit → batch replays
         handle(b2, 1)
-        return [
-            (r.url, r.warc_date, r.record_type, r.refers_to_url,
-             r.refers_to_date, r.saved_bytes)
-            for r in read_extracted(spark, res).collect()
-        ]
+        clean_runs[bridge] = [_row_multiset(spark, d) for d in dirs]
+    clean = clean_runs[bridge]
 
-    clean = run(False, "clean")
-    replayed = run(True, "replayed")
-    assert len(replayed) == len(clean) + b1.count()
-    by_key: dict = {}
-    for row in replayed:
-        by_key.setdefault(row[:2], set()).add(row[2:])
-    conflicting = {k: v for k, v in by_key.items() if len(v) != 1}
-    assert not conflicting, conflicting
-    assert set(replayed) == set(clean) and len(set(clean)) == len(clean)
+    handle, b1, b2, index_dir, dirs = _replay_case(spark, bridge, tmp_path / "crash")
+    if window == "a":
+        commit = writer._commit_manifest
+        crashed = []
+
+        def crash_on_advance(cdir, run_id, manifest):
+            if cdir.startswith(index_dir) and not crashed:
+                crashed.append(run_id)
+                raise RuntimeError("crash before the index advance commits")
+            commit(cdir, run_id, manifest)
+
+        monkeypatch.setattr(writer, "_commit_manifest", crash_on_advance)
+        with pytest.raises(RuntimeError, match="crash before"):
+            handle(b1, 0)
+        assert crashed
+    else:
+        handle(b1, 0)
+    handle(b1, 0)
+    handle(b2, 1)
+    assert [_row_multiset(spark, d) for d in dirs] == clean
+    assert all(clean)
+
+
+def test_exact_dedup_restart_from_checkpoint(spark, tmp_path):
+    """A real streaming query that dies after batch 1's outputs commit
+    and restarts from the same checkpoint replays batch 1 under the
+    same query id, so the committed rows equal a clean query's.  The
+    two queries' run ids differ, so the query id is part of them."""
+    from extractor.streaming.stream import streaming_exact_dedup
+    from extractor.writer import committed_run_ids
+
+    src = str(tmp_path / "src")
+    for rows in _DOC_BATCHES:
+        _docs(spark, rows).coalesce(1).write.mode("append").parquet(src)
+    schema = _docs(spark, _DOC_BATCHES[0]).schema
+
+    def run(tag, crash_after_batch=None):
+        idx, res = str(tmp_path / f"idx_{tag}"), str(tmp_path / f"res_{tag}")
+        handle = streaming_exact_dedup(None, idx, res)
+
+        def crashing(df, batch_id):
+            handle(df, batch_id)
+            if batch_id == crash_after_batch:
+                raise RuntimeError("query dies before its checkpoint commit")
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            stream.writeStream.foreachBatch(crashing)
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        if crash_after_batch is None:
+            q.awaitTermination(120)
+        else:
+            with pytest.raises(StreamingQueryException):
+                q.awaitTermination(120)
+        return idx, res
+
+    clean_dirs = run("clean")
+    run("crashed", crash_after_batch=1)
+    restarted_dirs = run("crashed")
+    clean = [_row_multiset(spark, d) for d in clean_dirs]
+    assert [_row_multiset(spark, d) for d in restarted_dirs] == clean
+    assert sum(clean[1].values()) == 7
+    ids = [set(committed_run_ids(res)) for _, res in (clean_dirs, restarted_dirs)]
+    assert len(ids[0]) == len(ids[1]) == 2 and not ids[0] & ids[1]

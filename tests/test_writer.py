@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from extractor.config import ExtractConfig
@@ -85,6 +86,39 @@ def test_uncommitted_snapshot_invisible(spark, tmp_path):
         assert False, "orphan snapshot should be invisible"
     except FileNotFoundError:
         pass
+
+
+def test_explicit_run_id_retry_is_idempotent(spark, tmp_path, monkeypatch):
+    """write_snapshot with an explicit run_id: a retry after a crash
+    between the data write and the manifest replaces the orphan and
+    commits one snapshot; a retry after compaction folded the run
+    writes nothing."""
+    from extractor import writer
+    from extractor.writer import compact_snapshots
+
+    out_dir = str(tmp_path / "retried")
+    df = spark.createDataFrame([("u1", 1), ("u2", 2)], "url string, v int")
+    commit = writer._commit_manifest
+
+    def crash(cdir, run_id, manifest):
+        raise RuntimeError("crash before the manifest rename")
+
+    monkeypatch.setattr(writer, "_commit_manifest", crash)
+    with pytest.raises(RuntimeError, match="crash before"):
+        write_snapshot(df, out_dir, run_id="r1")
+    assert os.path.isdir(os.path.join(out_dir, "snapshots", "r1"))
+    monkeypatch.setattr(writer, "_commit_manifest", commit)
+
+    assert write_snapshot(df, out_dir, run_id="r1") == "r1"
+    assert committed_run_ids(out_dir) == ["r1"]
+    assert read_extracted(spark, out_dir).count() == 2
+
+    write_snapshot(df, out_dir, run_id="r2")
+    crun = compact_snapshots(spark, out_dir)
+    assert write_snapshot(df, out_dir, run_id="r1") == "r1"
+    assert committed_run_ids(out_dir) == [crun]
+    assert read_extracted(spark, out_dir).count() == 4
+    assert read_lineage(spark, out_dir).count() == 2
 
 
 def test_run_extract_script_end_to_end(spark, tmp_path, monkeypatch, capsys):
