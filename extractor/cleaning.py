@@ -10,17 +10,18 @@ These are the byte-identity contract for the whole engine: every
 extracted text passes through them, and pytest asserts byte equality
 per url against a single-process oracle that calls the same spec.
 
-They stay in Python (Pandas UDF), never Java ``regexp_replace`` —
-Python ``re`` and Java regex differ on enough edge cases (e.g. what
-``.`` matches, empty-match advancement) that re-expressing the
-patterns in SQL would silently break byte-identity (SURVEY.md §7
-"What's hard").
+They stay in Python, never Java ``regexp_replace`` — Python ``re``
+and Java regex differ on enough edge cases (e.g. what ``.`` matches,
+empty-match advancement) that re-expressing the patterns in SQL would
+silently break byte-identity (SURVEY.md §7 "What's hard").
 
-Scale note: both functions are pure ``str -> str`` and are applied via
-Arrow-batched pandas UDFs (one Python call per ~10k-row batch), so the
-per-row interpreter overhead the reference pays (one request per doc)
-is amortized away.  At 100 TB this stage is embarrassingly parallel
-and holds whatever partitioning the upstream stage chose — no shuffle.
+Scale note: both functions are pure ``str -> str``.  The flagship
+pipeline calls them per row inside its ``mapInArrow`` stages, right
+after extraction, so the text never makes a second trip across the
+Arrow boundary.  The ``pandas_udf`` wrappers at the bottom serve only
+the registry queries that clean a column on its own.  Either way the
+stage is embarrassingly parallel and holds whatever partitioning the
+upstream stage chose — no shuffle.
 """
 
 from __future__ import annotations
@@ -95,7 +96,7 @@ def clean_stdout_output(stdout_text: str, strip_grounding: bool = True) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized (Arrow-batched) wrappers — the Spark-facing surface.
+# Vectorized (Arrow-batched) wrappers for the registry queries.
 # ---------------------------------------------------------------------------
 
 @pandas_udf(StringType())

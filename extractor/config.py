@@ -36,12 +36,3 @@ class ExtractConfig:
     # constants.py:49-56); resolved + guard-validated (F6) driver-side
     # in run_extraction, then shipped into the inference UDF closures.
     output_format: str = "markdown"           # reference constants.py:46 default
-    # Partition sizing for the two compute-heavy stages.  None → leave
-    # the scan partitioning alone (local mode); on a cluster set these
-    # to ~2-3× the executor-core count of each stage, independently —
-    # pdf work is ~pages-per-doc times heavier per input row
-    # (north_rule: "html vs pdf rows are routed into separate
-    # repartitioned stages sized to GPU batch capacity").
-    html_partitions: int | None = None
-    pdf_partitions: int | None = None
-    image_partitions: int | None = None

@@ -765,35 +765,50 @@ def meta_robots_flags(
     )
 
 
+# The first <a>/<link> tag that declares rel="license" and points into
+# creativecommons.org, the two attributes in either order.  Plain
+# alternation, no lookaround, so RE2 (the DuckDB twins) reads it the
+# same as Java.
+_CC_LICENSE_TAG = (
+    r"<(?:a|link)\s[^>]*"
+    r"(?:\brel=[\"']?license\b[^>]*creativecommons\.org/"
+    r"|creativecommons\.org/[^>]*\brel=[\"']?license\b)[^>]*>"
+)
+
+
 def detect_license(
     pages: DataFrame,
     url_col: str = "url",
     html_col: str = "html",
 ) -> DataFrame:
     """Creative-Commons license detection from the page's own markup —
-    the signal behind "permissively-licensed subset" corpus cuts: a
-    link into ``creativecommons.org/licenses/<code>/<version>/`` (the
-    rel="license" convention) or ``publicdomain/zero/1.0`` (CC0).
+    the signal behind "permissively-licensed subset" corpus cuts: an
+    ``<a>`` or ``<link>`` tag with ``rel="license"`` whose link goes
+    into ``creativecommons.org/licenses/<code>/<version>/`` or
+    ``publicdomain/zero/1.0`` (CC0).
     Returns ``(url, license_code, license_version,
     allows_commercial, allows_derivatives)`` — booleans NULL when no
     license was declared (unknown is not permissive; downstream cuts
     filter on ``allows_commercial IS TRUE``).
 
-    URL-anchored on purpose: prose like "released under a creative
-    commons license" declares nothing machine-readable and is
-    ignored.  NC (non-commercial) and ND (no-derivatives) modules are
-    read off the license code, the only place they exist.
+    Tag-anchored on purpose: prose like "released under a creative
+    commons license" declares nothing machine-readable, and a bare
+    creativecommons.org link (an image attribution) licenses the
+    linked work, not the page; both are ignored.  NC (non-commercial)
+    and ND (no-derivatives) modules are read off the license code, the
+    only place they exist.
 
-    Expression-only (two regexp_extract + string tests on the
-    ≤10-char code): map-only, no shuffle at any scale."""
-    low = F.lower(F.col(html_col))
+    Expression-only (three regexp_extract + string tests on the
+    matched tag and the ≤10-char code): map-only, no shuffle at any
+    scale."""
+    tag = F.regexp_extract(F.lower(F.col(html_col)), _CC_LICENSE_TAG, 0)
     code0 = F.regexp_extract(
-        low, r"creativecommons\.org/licenses/([a-z-]+)/([0-9][0-9.]*)", 1
+        tag, r"creativecommons\.org/licenses/([a-z-]+)/([0-9][0-9.]*)", 1
     )
     ver0 = F.regexp_extract(
-        low, r"creativecommons\.org/licenses/([a-z-]+)/([0-9][0-9.]*)", 2
+        tag, r"creativecommons\.org/licenses/([a-z-]+)/([0-9][0-9.]*)", 2
     )
-    cc0 = low.contains("creativecommons.org/publicdomain/zero/1.0")
+    cc0 = tag.contains("creativecommons.org/publicdomain/zero/1.0")
     code = (
         F.when(cc0, F.lit("cc0"))
         .when(code0 != "", code0)

@@ -5,12 +5,12 @@ temp file → single-GPU-thread infer → clean → JSON) with one declarative
 DataFrame job:
 
     pages ──route (JVM exprs)──┬─ quarantine rows (errors are data)
-                               ├─ html: mapInPandas(extract+clean)
-                               ├─ image: mapInPandas(compress T1/T2 →
+                               ├─ html: mapInArrow(extract+clean)
+                               ├─ image: mapInArrow(compress T1/T2 →
                                │         micro-batched OCR T5 → clean)
-                               └─ pdf:  mapInPandas(page explode T4)
+                               └─ pdf:  mapInArrow(page explode T4)
                                         → repartition(url, page_number)   # page-level salting
-                                        → mapInPandas(micro-batched OCR T5 + clean T7/T8)
+                                        → mapInArrow(micro-batched OCR T5 + clean T7/T8)
                                         → groupBy(url) reassembly A1-A4
             └────────────── unionByName ──────────────┘ → extracted
 
@@ -20,36 +20,39 @@ express):
 * **Routing/validation stay JVM-side** — extension/size/empty
   predicates are Catalyst expressions (whole-stage codegen), never
   Python; the scan only reads the columns each branch needs.
+* **One stage shape** — every Python stage is a ``mapInArrow``
+  function: its key columns (url, warc_ts, and the page numbers after
+  the explode) pass through as the Arrow arrays they arrived as, and
+  only the columns the stage computes are built in Python.
 * **Page explode BEFORE the expensive stage** — a 100-page PDF is a
   single megarow; AQE can split shuffle partitions but not rows, so
   skew must be broken by fan-out *then* ``repartition(url,
   page_number)``, which scatters one document's pages across the
   cluster (north_rule "page-level salting").  The explode stage only
   slices bytes (cheap); OCR runs after the scatter.
-* **Micro-batched inference** — the OCR stage calls
+* **Micro-batched inference** — the image and OCR stages call
   ``engine.infer_batch`` once per Arrow batch (bounded by
   ``spark.sql.execution.arrow.maxRecordsPerBatch``), the batch analog
   of sizing requests to GPU capacity; the engine itself is a lazy
   per-worker singleton (one model load per executor, reference
   model_loader.py:59-61 analog).
-* **Errors are data** — every exception inside a UDF becomes an error
+* **Errors are data** — every exception inside a stage becomes an error
   row (success=false, error text), mirroring the reference's per-page
   isolation (pdf_processor.py:228-247); a data error never kills a
   task, so one poison document cannot fail a 100 TB job.
-* **html and pdf are separately repartitionable** (``ExtractConfig``)
-  because their per-row costs differ by ~pages-per-doc; on a GPU
-  cluster the pdf stage is sized to GPU batch capacity independently
-  of the html (CPU) stage.
 """
 
 from __future__ import annotations
 
 import time
+from functools import reduce
 from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
 from extractor import MODEL_VERSION
 from extractor.cleaning import clean_stdout_output
@@ -66,11 +69,11 @@ from extractor.config import (
 from extractor.engine import get_engine, resolve_prompt
 from extractor.html_extract import html_to_markdown
 from extractor.pdf_extract import split_pdf_pages
-from extractor.schema import HTML_RESULT_SCHEMA, PDF_PAGE_SCHEMA
-
-PDF_PAGE_TEXT_SCHEMA = (
-    "url string, warc_ts timestamp, page_number int, total_pages int, "
-    "text string, success boolean, error string, latency_s double"
+from extractor.schema import (
+    EXTRACTED_SCHEMA,
+    HTML_RESULT_SCHEMA,
+    PDF_PAGE_SCHEMA,
+    PDF_PAGE_TEXT_SCHEMA,
 )
 
 
@@ -105,117 +108,144 @@ def _quarantine_error(cfg: ExtractConfig):
     )
 
 
+def _quarantined(routed: DataFrame) -> DataFrame:
+    """The rows validation rejected, as error rows (success=false)."""
+    return routed.filter(F.col("route_error").isNotNull()).select(
+        "url", "warc_ts", "doc_type",
+        F.lit(False).alias("success"), F.col("route_error").alias("error"),
+    )
+
+
+def _project(df: DataFrame, schema: StructType, **fixed: Column) -> DataFrame:
+    """A branch's output in ``schema``'s field order: ``fixed`` columns
+    by name, then the columns ``df`` has, and every other field as a
+    null of the schema's type."""
+
+    def col(f):
+        if f.name in fixed:
+            return fixed[f.name].alias(f.name)
+        if f.name in df.columns:
+            return F.col(f.name)
+        return F.lit(None).cast(f.dataType).alias(f.name)
+
+    return df.select([col(f) for f in schema.fields])
+
+
 # ---------------------------------------------------------------------------
-# HTML branch
+# Arrow stages and the one inference step
 # ---------------------------------------------------------------------------
+
+def _emit(schema: StructType, keys: pa.RecordBatch, rows: list[tuple]) -> pa.RecordBatch:
+    """A stage's output batch: the ``keys`` columns pass through as the
+    Arrow arrays they are; the remaining ``schema`` fields, in order,
+    are built from ``rows`` (one tuple of computed values per row)."""
+    computed = [f for f in schema.fields if f.name not in keys.schema.names]
+    values = list(zip(*rows)) if rows else [()] * len(computed)
+    built = {
+        f.name: pa.array(list(v), to_arrow_type(f.dataType))
+        for f, v in zip(computed, values)
+    }
+    return pa.RecordBatch.from_arrays(
+        [built[n] if n in built else keys.column(n) for n in schema.names],
+        names=schema.names,
+    )
+
+
+def _infer(engine, payloads: list[bytes], prompt: str, strip: bool) -> list[tuple]:
+    """One engine call for the batch → ``(text | None, error | None,
+    latency_s)`` per payload, text cleaned (T7/T8).  The call is one
+    unit of GPU work, so its wall time is split evenly over the rows.
+    If it fails, a poison payload is isolated by one call per payload
+    (reference pdf_processor.py:228-247), each row timed on its own
+    and carrying the raw engine error."""
+    if not payloads:
+        return []
+    t0 = time.perf_counter()
+    try:
+        raws = engine.infer_batch(payloads, prompt)
+        share = (time.perf_counter() - t0) / len(payloads)
+        return [(clean_stdout_output(raw, strip_grounding=strip), None, share)
+                for raw in raws]
+    except Exception:
+        out = []
+        for payload in payloads:
+            t1 = time.perf_counter()
+            try:
+                raw = engine.infer_batch([payload], prompt)[0]
+                text, err = clean_stdout_output(raw, strip_grounding=strip), None
+            except Exception as exc:
+                text, err = None, str(exc)
+            out.append((text, err, time.perf_counter() - t1))
+        return out
+
+
+_KEYS = ["url", "warc_ts"]
+
 
 def _html_extract_iter(cfg: ExtractConfig):
     strip = cfg.strip_grounding
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            rows = []
+            for html in b.column("html").to_pylist():
                 t0 = time.perf_counter()
                 try:
-                    md = html_to_markdown(r.html)
-                    text = clean_stdout_output(md, strip_grounding=strip)
-                    out.append((r.url, r.warc_ts, text, True, None,
-                                round(time.perf_counter() - t0, 6)))
+                    text = clean_stdout_output(html_to_markdown(html), strip_grounding=strip)
+                    rows.append((text, True, None, round(time.perf_counter() - t0, 6)))
                 except Exception as exc:  # errors are data
-                    out.append((r.url, r.warc_ts, None, False, str(exc),
-                                round(time.perf_counter() - t0, 6)))
-            yield pd.DataFrame(
-                out, columns=["url", "warc_ts", "text", "success", "error", "latency_s"]
-            )
+                    rows.append((None, False, str(exc), round(time.perf_counter() - t0, 6)))
+            yield _emit(HTML_RESULT_SCHEMA, b.select(_KEYS), rows)
 
     return fn
 
 
 def extract_html(valid_html: DataFrame, cfg: ExtractConfig) -> DataFrame:
     df = valid_html.select("url", "warc_ts", "html")
-    if cfg.html_partitions:
-        df = df.repartition(cfg.html_partitions)
-    return df.mapInPandas(_html_extract_iter(cfg), schema=HTML_RESULT_SCHEMA)
+    return df.mapInArrow(_html_extract_iter(cfg), schema=HTML_RESULT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # Image branch — the reference's PRIMARY endpoint (POST /ocr/image,
 # api/routers/ocr.py:77-178): compress/resize (T1/T2) → single-image
 # inference (T5) → clean (T7/T8).  One input row → one result row; no
-# page fan-out.  Inference is micro-batched per Arrow batch exactly
-# like the pdf OCR stage, with per-row degradation on batch failure.
+# page fan-out.
 # ---------------------------------------------------------------------------
 
 def _image_extract_iter(cfg: ExtractConfig):
     strip = cfg.strip_grounding
     prompt = resolve_prompt(cfg.output_format)  # driver-side T9+F6
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from extractor.operators.multimodal import compress_image
 
         engine = get_engine()  # per-worker singleton, loaded once
-        for pdf in batches:
-            n = len(pdf)
-            payloads: list[bytes | None] = [None] * n
-            errors: dict[int, str] = {}
-            # Per-row latency semantics (reference image_processor.py
-            # times each request end-to-end, :136/:194): preprocessing
-            # (T1/T2 compress) is timed PER IMAGE; the micro-batched
-            # inference call is one unit of GPU work, so its wall time
-            # is amortized equally over the batch's rows — except in
-            # the degraded per-row path, where each row gets its own
-            # true inference time.
-            comp_lat = [0.0] * n
-            infer_lat: dict[int, float] = {}
-            for i, r in enumerate(pdf.itertuples(index=False)):
+        for b in batches:
+            # Reference image_processor.py times each request end to end
+            # (:136/:194): compress (T1/T2) is timed per image, on top of
+            # the row's share of the inference call.
+            rows, ok, payloads = [], [], []
+            for i, img in enumerate(b.column("html").to_pylist()):
                 t0 = time.perf_counter()
+                err = None
                 try:
-                    compressed, _w, _h, _ow, _oh = compress_image(bytes(r.html))
-                    payloads[i] = compressed
+                    payloads.append(compress_image(img)[0])
+                    ok.append(i)
                 except Exception as exc:  # undecodable image → error row
-                    errors[i] = str(exc)
-                comp_lat[i] = time.perf_counter() - t0
-            ok_idx = [i for i in range(n) if i not in errors]
-            texts: dict[int, str] = {}
-            t1 = time.perf_counter()
-            try:
-                raws = engine.infer_batch([payloads[i] for i in ok_idx], prompt)
-                share = (time.perf_counter() - t1) / max(len(ok_idx), 1)
-                for i, raw in zip(ok_idx, raws):
-                    texts[i] = clean_stdout_output(raw, strip_grounding=strip)
-                    infer_lat[i] = share
-            except Exception:
-                # Poison-image isolation: degrade to per-row calls so the
-                # failure stays on its row (reference handlers.py:123-130
-                # maps OCR errors per request; here per row).
-                for i in ok_idx:
-                    t2 = time.perf_counter()
-                    try:
-                        raw = engine.infer_batch([payloads[i]], prompt)[0]
-                        texts[i] = clean_stdout_output(raw, strip_grounding=strip)
-                    except Exception as exc:
-                        errors[i] = str(exc)
-                    infer_lat[i] = time.perf_counter() - t2
-            out = []
-            for i, r in enumerate(pdf.itertuples(index=False)):
-                lat = round(comp_lat[i] + infer_lat.get(i, 0.0), 6)
-                if i in errors:
-                    out.append((r.url, r.warc_ts, None, False, errors[i], lat))
-                else:
-                    out.append((r.url, r.warc_ts, texts[i], True, None, lat))
-            yield pd.DataFrame(
-                out, columns=["url", "warc_ts", "text", "success", "error", "latency_s"]
-            )
+                    err = str(exc)
+                rows.append((None, err, time.perf_counter() - t0))
+            for i, (text, err, lat) in zip(ok, _infer(engine, payloads, prompt, strip)):
+                rows[i] = (text, err, rows[i][2] + lat)
+            yield _emit(HTML_RESULT_SCHEMA, b.select(_KEYS), [
+                (text, err is None, err, round(lat, 6)) for text, err, lat in rows
+            ])
 
     return fn
 
 
 def extract_image(valid_image: DataFrame, cfg: ExtractConfig) -> DataFrame:
     df = valid_image.select("url", "warc_ts", "html")
-    if cfg.image_partitions:
-        df = df.repartition(cfg.image_partitions)
-    return df.mapInPandas(_image_extract_iter(cfg), schema=HTML_RESULT_SCHEMA)
+    return df.mapInArrow(_image_extract_iter(cfg), schema=HTML_RESULT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -225,28 +255,28 @@ def extract_image(valid_image: DataFrame, cfg: ExtractConfig) -> DataFrame:
 def _pdf_explode_iter(cfg: ExtractConfig):
     max_pages = cfg.max_pdf_pages
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            take, rows = [], []
+            for i, doc in enumerate(b.column("html").to_pylist()):
                 t0 = time.perf_counter()
                 try:
-                    pages = split_pdf_pages(r.html)
-                except ValueError as exc:
-                    out.append((r.url, r.warc_ts, None, None, None, False,
-                                str(exc), round(time.perf_counter() - t0, 6)))
-                    continue
-                if len(pages) > max_pages:
+                    pages = split_pdf_pages(doc)
                     # F4 (reference pdf_processor.py:175-177): the cap is a
                     # doc-level rejection, not a truncation.
-                    out.append((r.url, r.warc_ts, None, None, None, False,
-                                ERR_TOO_MANY_PAGES,
-                                round(time.perf_counter() - t0, 6)))
+                    err = ERR_TOO_MANY_PAGES if len(pages) > max_pages else None
+                except ValueError as exc:
+                    err = str(exc)
+                if err is not None:
+                    take.append(i)
+                    rows.append((None, None, None, False, err,
+                                 round(time.perf_counter() - t0, 6)))
                     continue
                 n = len(pages)
-                for i, page in enumerate(pages):
-                    out.append((r.url, r.warc_ts, i + 1, n, page, True, None, 0.0))
-            yield pd.DataFrame(out, columns=[f.name for f in PDF_PAGE_SCHEMA.fields])
+                take += [i] * n
+                rows += [(k + 1, n, page, True, None, 0.0) for k, page in enumerate(pages)]
+            keys = b.select(_KEYS).take(pa.array(take, pa.int64()))
+            yield _emit(PDF_PAGE_SCHEMA, keys, rows)
 
     return fn
 
@@ -255,64 +285,23 @@ def _pdf_ocr_iter(cfg: ExtractConfig):
     strip = cfg.strip_grounding
     prompt = resolve_prompt(cfg.output_format)  # driver-side T9+F6
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         engine = get_engine()  # per-worker singleton, loaded once
-        for pdf in batches:
-            ok_mask = pdf["page_number"].notna() & pdf["error"].isna()
-            rows = []
-            # micro-batch: ONE engine call for the whole Arrow batch
-            ok_rows = pdf[ok_mask]
-            raw_results: dict[int, tuple] = {}
-            # Per-page latency semantics mirror the image branch: the
-            # micro-batched call is one unit of GPU work amortized
-            # equally over its pages; the degraded path restores true
-            # per-page times (reference pdf_processor times each page).
-            page_lat: dict[int, float] = {}
-            t0 = time.perf_counter()
-            payloads = [bytes(b) for b in ok_rows["raw_page"]]
-            try:
-                # One engine call per Arrow batch — the GPU micro-batch.
-                raws = engine.infer_batch(payloads, prompt)
-                share = (time.perf_counter() - t0) / max(len(payloads), 1)
-                pairs = list(zip(ok_rows.index, raws))
-                for idx in ok_rows.index:
-                    page_lat[idx] = share
-            except Exception:
-                # A poison page failed the whole batch: degrade to
-                # per-page calls so the error is isolated to its row
-                # (reference pdf_processor.py:228-247 semantics).
-                pairs = []
-                for idx, payload in zip(ok_rows.index, payloads):
-                    t1 = time.perf_counter()
-                    try:
-                        pairs.append((idx, engine.infer_batch([payload], prompt)[0]))
-                    except Exception as exc:
-                        # Page row carries the RAW error (reference page
-                        # dict, pdf_processor.py:241-247); the doc-level
-                        # "Failed to process page N: …" prefix is added
-                        # by the reassembly warnings (A2, :230).
-                        raw_results[idx] = ("", False, str(exc))
-                    page_lat[idx] = time.perf_counter() - t1
-            for idx, raw in pairs:
-                text = clean_stdout_output(raw, strip_grounding=strip)
-                text = text.strip() if text else ""  # T10
-                raw_results[idx] = (text, True, None)
-            for idx in pdf.index:
-                r = pdf.loc[idx]
-                if idx in raw_results:
-                    text, ok, err = raw_results[idx]
-                    rows.append((r["url"], r["warc_ts"],
-                                 int(r["page_number"]), int(r["total_pages"]),
-                                 text, ok, err,
-                                 round(page_lat.get(idx, 0.0), 6)))
-                else:  # doc-level error row passes through
-                    rows.append((r["url"], r["warc_ts"], None, None, None,
-                                 False, r["error"], r["latency_s"]))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "warc_ts", "page_number", "total_pages",
-                         "text", "success", "error", "latency_s"],
-            )
+        for b in batches:
+            # A doc-level error row (null page_number) passes through
+            # with its own success, error and latency.
+            passed = (b.column(c).to_pylist() for c in ("success", "error", "latency_s"))
+            rows = [(None, *row) for row in zip(*passed)]
+            raw = b.column("raw_page").to_pylist()
+            pages = b.column("page_number").to_pylist()
+            ok = [i for i, p in enumerate(pages) if p is not None]
+            for i, (text, err, lat) in zip(ok, _infer(engine, [raw[i] for i in ok], prompt, strip)):
+                # A failed page carries the RAW error (reference page dict,
+                # pdf_processor.py:241-247); the "Failed to process page N"
+                # prefix is added by the reassembly warnings (A2, :230).
+                rows[i] = ((text or "").strip(), err is None, err, round(lat, 6))  # T10
+            keys = b.select(_KEYS + ["page_number", "total_pages"])
+            yield _emit(PDF_PAGE_TEXT_SCHEMA, keys, rows)
 
     return fn
 
@@ -324,14 +313,14 @@ def extract_pdf_pages(valid_pdf: DataFrame, cfg: ExtractConfig) -> DataFrame:
     them in :func:`extract_pdf`."""
     df = valid_pdf.select("url", "warc_ts", "html")
     # Explode first (cheap byte slicing)…
-    pages = df.mapInPandas(_pdf_explode_iter(cfg), schema=PDF_PAGE_SCHEMA)
+    pages = df.mapInArrow(_pdf_explode_iter(cfg), schema=PDF_PAGE_SCHEMA)
     # …then scatter pages so a giant PDF cannot pin one partition
-    # (page-level salting; see module docstring).
-    n_parts = cfg.pdf_partitions or pages.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    pages = pages.repartition(int(n_parts), "url", "page_number")
-    return pages.mapInPandas(_pdf_ocr_iter(cfg), schema=PDF_PAGE_TEXT_SCHEMA)
+    # (page-level salting; see module docstring).  The explicit count
+    # keeps AQE from coalescing these cheap-bytes, expensive-compute
+    # rows back into a few tasks.
+    n_parts = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    pages = pages.repartition(n_parts, "url", "page_number")
+    return pages.mapInArrow(_pdf_ocr_iter(cfg), schema=PDF_PAGE_TEXT_SCHEMA)
 
 
 def extract_pdf(valid_pdf: DataFrame, cfg: ExtractConfig) -> DataFrame:
@@ -407,68 +396,14 @@ def run_extraction(
 ) -> DataFrame:
     """pages table → extracted table (EXTRACTED_SCHEMA)."""
     routed = route(pages).withColumn("route_error", _quarantine_error(cfg))
-
-    _PAGES_T = (
-        "array<struct<page_number:int,text:string,success:boolean,"
-        "error:string,latency_s:double>>"
-    )
-    quarantined = (
-        routed.filter(F.col("route_error").isNotNull())
-        .select(
-            "url",
-            "warc_ts",
-            "doc_type",
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast(_PAGES_T).alias("pages"),
-            F.lit(None).cast("int").alias("total_pages"),
-            F.lit(False).alias("success"),
-            F.col("route_error").alias("error"),
-            F.lit(None).cast("array<string>").alias("warnings"),
-            F.lit(None).cast("double").alias("latency_s"),
-            F.lit(None).cast("string").alias("model_version"),
-        )
-    )
-
     valid = routed.filter(F.col("route_error").isNull())
-
-    def _flat_out(df: DataFrame, doc_type: str) -> DataFrame:
-        """Single-result branches (html, image): no pages, no warnings
-        (the reference's ImageOCRResponse carries neither)."""
-        return df.select(
-            "url",
-            "warc_ts",
-            F.lit(doc_type).alias("doc_type"),
-            "text",
-            F.lit(None).cast(_PAGES_T).alias("pages"),
-            F.lit(None).cast("int").alias("total_pages"),
-            "success",
-            "error",
-            F.lit(None).cast("array<string>").alias("warnings"),
-            "latency_s",
-            F.lit(MODEL_VERSION).alias("model_version"),
+    branches = [
+        _project(extract(valid.filter(F.col("doc_type") == doc_type), cfg),
+                EXTRACTED_SCHEMA, doc_type=F.lit(doc_type),
+                model_version=F.lit(MODEL_VERSION))
+        for doc_type, extract in (
+            ("html", extract_html), ("image", extract_image), ("pdf", extract_pdf)
         )
-
-    html_out = _flat_out(
-        extract_html(valid.filter(F.col("doc_type") == "html"), cfg), "html"
-    )
-    image_out = _flat_out(
-        extract_image(valid.filter(F.col("doc_type") == "image"), cfg), "image"
-    )
-    pdf_out = extract_pdf(valid.filter(F.col("doc_type") == "pdf"), cfg).select(
-        "url",
-        "warc_ts",
-        F.lit("pdf").alias("doc_type"),
-        "text",
-        "pages",
-        "total_pages",
-        "success",
-        "error",
-        "warnings",
-        "latency_s",
-        F.lit(MODEL_VERSION).alias("model_version"),
-    )
-    return (
-        quarantined.unionByName(html_out)
-        .unionByName(image_out)
-        .unionByName(pdf_out)
-    )
+    ]
+    return reduce(DataFrame.unionByName,
+                  branches, _project(_quarantined(routed), EXTRACTED_SCHEMA))

@@ -1471,11 +1471,12 @@ def q_meta_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "license_detect",
-    # URL-anchored detection: every body says "released under a
-    # creative commons license" in prose (declares nothing); only the
-    # planted hrefs into creativecommons.org count.  Residues: %5
-    # CC BY 4.0, %7 BY-NC-SA 3.0 (non-commercial), %11 CC0 public
-    # domain, %13 BY-ND 4.0 (no derivatives), else undeclared.
+    # Tag-anchored detection: every body says "released under a
+    # creative commons license" in prose (declares nothing); only
+    # rel="license" tags into creativecommons.org count.  Residues: %5
+    # CC BY 4.0, %7 BY-NC-SA 3.0 (non-commercial, href before rel),
+    # %11 CC0 public domain (<link>), %13 BY-ND 4.0 (no derivatives),
+    # %17 a bare image-attribution link (undeclared), else undeclared.
     """
     WITH pages AS (
       SELECT 'https://l.test/' || doc_id::VARCHAR AS url,
@@ -1484,25 +1485,33 @@ def q_meta_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                   WHEN doc_id % 5 = 0 THEN
                     '<a rel="license" href="https://creativecommons.org/licenses/by/4.0/">CC BY</a>'
                   WHEN doc_id % 7 = 0 THEN
-                    '<a href="https://creativecommons.org/licenses/by-nc-sa/3.0/">BY-NC-SA</a>'
+                    '<a href="https://creativecommons.org/licenses/by-nc-sa/3.0/" rel="license">BY-NC-SA</a>'
                   WHEN doc_id % 11 = 0 THEN
-                    '<a href="https://creativecommons.org/publicdomain/zero/1.0/">CC0</a>'
+                    '<link rel="license" href="https://creativecommons.org/publicdomain/zero/1.0/">'
                   WHEN doc_id % 13 = 0 THEN
-                    '<a href="https://creativecommons.org/licenses/by-nd/4.0/">BY-ND</a>'
+                    '<a rel="license" href="https://creativecommons.org/licenses/by-nd/4.0/">BY-ND</a>'
+                  WHEN doc_id % 17 = 0 THEN
+                    '<a href="https://creativecommons.org/licenses/by-sa/2.0/"><img src="photo.jpg"></a>'
                   ELSE '' END
              || '<p>' || text || '</p></body></html>' AS html
       FROM documents
-    ), det AS (
+    ), tags AS (
       SELECT url,
              regexp_extract(lower(html),
+               '<(?:a|link)\\s[^>]*(?:\\brel=["'']?license\\b[^>]*creativecommons\\.org/|creativecommons\\.org/[^>]*\\brel=["'']?license\\b)[^>]*>', 0)
+               AS tag
+      FROM pages
+    ), det AS (
+      SELECT url,
+             regexp_extract(tag,
                'creativecommons\\.org/licenses/([a-z-]+)/([0-9][0-9.]*)', 1)
                AS code0,
-             regexp_extract(lower(html),
+             regexp_extract(tag,
                'creativecommons\\.org/licenses/([a-z-]+)/([0-9][0-9.]*)', 2)
                AS ver0,
-             contains(lower(html),
+             contains(tag,
                'creativecommons.org/publicdomain/zero/1.0') AS cc0
-      FROM pages
+      FROM tags
     ), lic AS (
       SELECT url,
              CASE WHEN cc0 THEN 'cc0'
@@ -1524,11 +1533,12 @@ def q_meta_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Creative-Commons license detection
     (operators.crawl.detect_license) — the machine-readable signal
-    behind permissively-licensed corpus cuts: a creativecommons.org
-    license URL in the page's own markup, reduced to (code, version,
-    allows_commercial, allows_derivatives), NULLs when undeclared
-    (unknown is NOT permissive).  The fixture plants prose claiming a
-    CC license in every body, so URL-anchoring is load-bearing.
+    behind permissively-licensed corpus cuts: a rel="license" tag into
+    creativecommons.org in the page's own markup, reduced to (code,
+    version, allows_commercial, allows_derivatives), NULLs when
+    undeclared (unknown is NOT permissive).  The fixture plants prose
+    claiming a CC license in every body and a bare image-attribution
+    link on one residue, so tag-anchoring is load-bearing.
     Map-only, expression-only."""
     from extractor.operators.crawl import detect_license
 
@@ -1537,11 +1547,13 @@ def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(d % 5 == 0, F.lit(
             '<a rel="license" href="https://creativecommons.org/licenses/by/4.0/">CC BY</a>'))
         .when(d % 7 == 0, F.lit(
-            '<a href="https://creativecommons.org/licenses/by-nc-sa/3.0/">BY-NC-SA</a>'))
+            '<a href="https://creativecommons.org/licenses/by-nc-sa/3.0/" rel="license">BY-NC-SA</a>'))
         .when(d % 11 == 0, F.lit(
-            '<a href="https://creativecommons.org/publicdomain/zero/1.0/">CC0</a>'))
+            '<link rel="license" href="https://creativecommons.org/publicdomain/zero/1.0/">'))
         .when(d % 13 == 0, F.lit(
-            '<a href="https://creativecommons.org/licenses/by-nd/4.0/">BY-ND</a>'))
+            '<a rel="license" href="https://creativecommons.org/licenses/by-nd/4.0/">BY-ND</a>'))
+        .when(d % 17 == 0, F.lit(
+            '<a href="https://creativecommons.org/licenses/by-sa/2.0/"><img src="photo.jpg"></a>'))
         .otherwise(F.lit(""))
     )
     pages = _docs(spark, sf_dir).select(
@@ -1558,8 +1570,9 @@ def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "compliance_rollup",
     # The governance chain over one fixture: robots meta tags
-    # (%5 noindex+nofollow, %7 noai) AND license links (%3 CC BY 4.0,
-    # %11 BY-NC 2.0) planted independently, so every combination of
+    # (%5 noindex+nofollow, %7 noai) AND rel="license" links (%3 CC BY
+    # 4.0, %11 BY-NC 2.0 href before rel; %13 a bare image-attribution
+    # link, undeclared) planted independently, so every combination of
     # (opt-out x license) occurs.  A page enters the compliant
     # training cut iff keep_for_training (no noindex, no noai) AND
     # its license affirmatively allows commercial use.
@@ -1575,9 +1588,11 @@ def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ELSE '' END
              || '</head><body>'
              || CASE WHEN doc_id % 3 = 0 THEN
-                  '<a href="https://creativecommons.org/licenses/by/4.0/">CC</a>'
+                  '<a rel="license" href="https://creativecommons.org/licenses/by/4.0/">CC</a>'
                 WHEN doc_id % 11 = 0 THEN
-                  '<a href="https://creativecommons.org/licenses/by-nc/2.0/">CC</a>'
+                  '<a href="https://creativecommons.org/licenses/by-nc/2.0/" rel="license">CC</a>'
+                WHEN doc_id % 13 = 0 THEN
+                  '<a href="https://creativecommons.org/licenses/by/4.0/"><img src="photo.jpg"></a>'
                 ELSE '' END
              || '<p>' || text || '</p></body></html>' AS html,
              text
@@ -1587,7 +1602,8 @@ def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
              coalesce(array_to_string(regexp_extract_all(lower(html),
                '<meta[^>]*name=["'']?robots\\b[^>]*>', 0), ' '), '')
                AS tag,
-             regexp_extract(lower(html),
+             regexp_extract(regexp_extract(lower(html),
+               '<(?:a|link)\\s[^>]*(?:\\brel=["'']?license\\b[^>]*creativecommons\\.org/|creativecommons\\.org/[^>]*\\brel=["'']?license\\b)[^>]*>', 0),
                'creativecommons\\.org/licenses/([a-z-]+)/([0-9][0-9.]*)', 1)
                AS code0
       FROM pages
@@ -1641,9 +1657,11 @@ def q_compliance_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lic = (
         F.when(d % 3 == 0, F.lit(
-            '<a href="https://creativecommons.org/licenses/by/4.0/">CC</a>'))
+            '<a rel="license" href="https://creativecommons.org/licenses/by/4.0/">CC</a>'))
         .when(d % 11 == 0, F.lit(
-            '<a href="https://creativecommons.org/licenses/by-nc/2.0/">CC</a>'))
+            '<a href="https://creativecommons.org/licenses/by-nc/2.0/" rel="license">CC</a>'))
+        .when(d % 13 == 0, F.lit(
+            '<a href="https://creativecommons.org/licenses/by/4.0/"><img src="photo.jpg"></a>'))
         .otherwise(F.lit(""))
     )
     pages = _docs(spark, sf_dir).select(

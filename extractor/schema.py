@@ -61,7 +61,24 @@ PDF_PAGE_SCHEMA = StructType(
     ]
 )
 
-# HTML branch output (before union).
+# OCR'd page rows (after the PDF OCR stage, before reassembly; the
+# streaming plane stores these as they are).  ``url`` is nullable here
+# because the union of the branches takes it from this stage, and the
+# written tables have always stored it as an optional column.
+PDF_PAGE_TEXT_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), True),
+        StructField("warc_ts", TimestampType(), True),
+        StructField("page_number", IntegerType(), True),
+        StructField("total_pages", IntegerType(), True),
+        StructField("text", StringType(), True),
+        StructField("success", BooleanType(), True),
+        StructField("error", StringType(), True),
+        StructField("latency_s", DoubleType(), True),
+    ]
+)
+
+# HTML/image branch output (before union).
 HTML_RESULT_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -90,6 +107,20 @@ EXTRACTED_SCHEMA = StructType(
         StructField("warnings", ArrayType(StringType()), True),
         StructField("latency_s", DoubleType(), True),
         StructField("model_version", StringType(), True),
+    ]
+)
+
+# Streaming extraction output: one row per html/image doc, per pdf
+# page, and per quarantined doc (page_number null except on pdf pages).
+STREAM_PAGE_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("warc_ts", TimestampType(), True),
+        StructField("doc_type", StringType(), True),
+        StructField("page_number", IntegerType(), True),
+        StructField("text", StringType(), True),
+        StructField("success", BooleanType(), True),
+        StructField("error", StringType(), True),
     ]
 )
 

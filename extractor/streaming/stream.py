@@ -6,7 +6,7 @@ pages table, however, is naturally a stream, so the engine provides:
 
 * :func:`streaming_extract_pages` — the stateless extraction stages
   (routing, validation, html extract+clean, pdf page fan-out + OCR)
-  over a file stream.  Stateless ``mapInPandas`` stages run unchanged
+  over a file stream.  Stateless ``mapInArrow`` stages run unchanged
   on streams.  Document reassembly (A1-A4) is a *stateful* aggregation
   keyed by url; for late-arriving pages the engine takes the
   lambda-architecture stance: the stream emits page-level rows
@@ -47,19 +47,22 @@ says why.
 from __future__ import annotations
 
 import hashlib
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from extractor.config import ExtractConfig
 from extractor.pipeline import (
+    _project,
     _quarantine_error,
+    _quarantined,
     extract_html,
     extract_image,
     extract_pdf_pages,
     route,
 )
-from extractor.schema import PAGES_SCHEMA
+from extractor.schema import PAGES_SCHEMA, STREAM_PAGE_SCHEMA
 from extractor.writer import (
     _committed_manifests,
     _is_committed,
@@ -109,47 +112,15 @@ def streaming_extract_pages(
     """
     routed = route(pages_stream).withColumn("route_error", _quarantine_error(cfg))
     valid = routed.filter(F.col("route_error").isNull())
-
-    html_rows = extract_html(valid.filter(F.col("doc_type") == "html"), cfg).select(
-        "url",
-        "warc_ts",
-        F.lit("html").alias("doc_type"),
-        F.lit(None).cast("int").alias("page_number"),
-        "text",
-        "success",
-        "error",
-    )
-    image_rows = extract_image(
-        valid.filter(F.col("doc_type") == "image"), cfg
-    ).select(
-        "url",
-        "warc_ts",
-        F.lit("image").alias("doc_type"),
-        F.lit(None).cast("int").alias("page_number"),
-        "text",
-        "success",
-        "error",
-    )
-    pdf_pages = extract_pdf_pages(
-        valid.filter(F.col("doc_type") == "pdf"), cfg
-    ).select(
-        "url", "warc_ts", F.lit("pdf").alias("doc_type"),
-        "page_number", "text", "success", "error",
-    )
-    quarantined = routed.filter(F.col("route_error").isNotNull()).select(
-        "url",
-        "warc_ts",
-        "doc_type",
-        F.lit(None).cast("int").alias("page_number"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(False).alias("success"),
-        F.col("route_error").alias("error"),
-    )
-    return (
-        html_rows.unionByName(image_rows)
-        .unionByName(pdf_pages)
-        .unionByName(quarantined)
-    )
+    rows = [
+        _project(extract(valid.filter(F.col("doc_type") == doc_type), cfg),
+                STREAM_PAGE_SCHEMA, doc_type=F.lit(doc_type))
+        for doc_type, extract in (
+            ("html", extract_html), ("image", extract_image), ("pdf", extract_pdf_pages)
+        )
+    ]
+    rows.append(_project(_quarantined(routed), STREAM_PAGE_SCHEMA))
+    return reduce(DataFrame.unionByName, rows)
 
 
 def warc_pages_stream(warc_stream: DataFrame) -> DataFrame:

@@ -49,9 +49,6 @@ def main() -> int:
                          "block-splittable response-record reader "
                          "(sources.warc.read_warc; html captures only)")
     ap.add_argument("--max-bytes", type=int, default=None)
-    ap.add_argument("--html-partitions", type=int, default=None)
-    ap.add_argument("--pdf-partitions", type=int, default=None)
-    ap.add_argument("--image-partitions", type=int, default=None)
     ap.add_argument("--output-format", default="markdown",
                     help="one of the six reference output formats "
                          "(markdown, text, table, figure, json, "
@@ -131,9 +128,6 @@ def main() -> int:
         if args.max_bytes:
             cfg_kwargs["max_bytes"] = args.max_bytes
     cfg = ExtractConfig(
-        html_partitions=args.html_partitions,
-        pdf_partitions=args.pdf_partitions,
-        image_partitions=args.image_partitions,
         output_format=args.output_format,
         strip_grounding=not args.include_grounding,
         **cfg_kwargs,

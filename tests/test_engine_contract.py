@@ -75,14 +75,21 @@ def test_resolve_prompt_formats():
         resolve_prompt("yaml")
 
 
-def test_pipeline_rejects_unknown_format():
+def test_pipeline_rejects_unknown_format(spark):
+    """An unknown output format fails while the plan is built, before
+    any job runs."""
     from extractor.config import ExtractConfig
-    from extractor.pipeline import _pdf_ocr_iter
+    from extractor.pipeline import run_extraction
 
-    import pytest
-
+    pages = spark.createDataFrame(
+        [("https://a.test/x.pdf", None, b"%PDF", None, None)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
+    before = set(jobs())
     with pytest.raises(ValueError):
-        _pdf_ocr_iter(ExtractConfig(output_format="nope"))
+        run_extraction(spark, pages, ExtractConfig(output_format="nope"))
+    assert set(jobs()) == before
 
 
 def test_gpu_engine_is_import_gated():

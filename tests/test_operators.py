@@ -3110,18 +3110,24 @@ def test_meta_robots_flags_tag_scoped(spark):
 
 
 def test_detect_license_url_anchored(spark):
-    """License comes from a creativecommons.org URL only — prose
-    claims declare nothing; NC blocks commercial, ND blocks
-    derivatives, CC0 allows both, undeclared is NULL (not
-    permissive)."""
+    """License comes from an <a>/<link> tag with rel="license" into
+    creativecommons.org, attributes in either order — prose claims and
+    bare links (an image attribution) declare nothing; NC blocks
+    commercial, ND blocks derivatives, CC0 allows both, undeclared is
+    NULL (not permissive)."""
     from extractor.operators.crawl import detect_license
 
+    cc = "https://creativecommons.org"
     pages = spark.createDataFrame(
         [
-            ("u1", '<a href="https://creativecommons.org/licenses/by/4.0/">x</a>'),
-            ("u2", '<a href="https://creativecommons.org/licenses/by-nc-nd/2.5/">x</a>'),
-            ("u3", '<a href="https://creativecommons.org/publicdomain/zero/1.0/">x</a>'),
+            ("u1", f'<a rel="license" href="{cc}/licenses/by/4.0/">x</a>'),
+            ("u2", f'<a rel="license" href="{cc}/licenses/by-nc-nd/2.5/">x</a>'),
+            ("u3", f'<link rel="license" href="{cc}/publicdomain/zero/1.0/">'),
             ("u4", "<p>this work is under a creative commons license</p>"),
+            ("u5", f'<a href="{cc}/licenses/by-sa/2.0/"><img src="p.jpg"></a>'),
+            ("u6", f"<A HREF='{cc}/licenses/by-nc/3.0/' class=x REL='license'>x</a>"),
+            ("u7", '<a rel="license" href="/terms">t</a>'
+                   f'<a href="{cc}/licenses/by/2.0/"><img src="p.jpg"></a>'),
         ],
         "url string, html string",
     )
@@ -3133,6 +3139,13 @@ def test_detect_license_url_anchored(spark):
     assert got["u3"].license_code == "cc0" and got["u3"].allows_commercial
     assert got["u4"].license_code is None  # prose trap
     assert got["u4"].allows_commercial is None
+    # a bare image-attribution link licenses the image, not the page
+    assert got["u5"].license_code is None and got["u5"].allows_commercial is None
+    # href before rel, single quotes, upper case
+    assert (got["u6"].license_code, got["u6"].license_version) == ("by-nc", "3.0")
+    assert not got["u6"].allows_commercial
+    # rel="license" and the CC link must be the same tag
+    assert got["u7"].license_code is None
 
 
 def test_markdown_outline_atx_traps(spark):

@@ -172,7 +172,7 @@ def test_image_branch_per_row_latency(monkeypatch):
     batch, not be a flat batch average."""
     import time as _t
 
-    import pandas as pd
+    import pyarrow as pa
 
     import extractor.operators.multimodal as mm
     from extractor import pipeline
@@ -186,15 +186,72 @@ def test_image_branch_per_row_latency(monkeypatch):
 
     monkeypatch.setattr(mm, "compress_image", slow)
     fn = pipeline._image_extract_iter(ExtractConfig())
-    batch = pd.DataFrame(
+    batch = pa.RecordBatch.from_pydict(
         {
             "url": ["u1", "u2", "u3"],
-            "warc_ts": [None] * 3,
+            "warc_ts": pa.array([None] * 3, pa.timestamp("us", tz="UTC")),
             "html": [b"IMG 10x10\na", b"IMG 10x10\nbb", b"IMG 10x10\nccc"],
         }
     )
-    out = next(fn(iter([batch])))
+    out = next(fn(iter([batch]))).to_pydict()
     lats = list(out["latency_s"])
     assert all(lat >= 0 for lat in lats)
     assert len(set(lats)) > 1, f"flat batch-average latency: {lats}"
     assert list(out["success"]) == [True] * 3
+
+
+@pytest.mark.parametrize("branch", ["image", "pdf"])
+def test_inference_fallback_isolates_poison_row(monkeypatch, branch):
+    """A poison payload fails the batched engine call; the shared
+    inference step then calls the engine once per payload.  The good
+    rows keep the text a clean batch gives them, the poison row carries
+    the raw engine error, and each row is timed on its own."""
+    import time as _t
+
+    import pyarrow as pa
+
+    from extractor import pipeline
+    from extractor.engine import CORRUPT_MARKER, SurrogateEngine
+
+    head = b"IMG 10x10\n" if branch == "image" else b"PAGE 1\n"
+    good_a, poison, good_c = head + b"alpha", head + CORRUPT_MARKER, head + b"gamma"
+    delay = {good_a: 0.01, poison: 0.05, good_c: 0.10}
+    surrogate = SurrogateEngine()
+
+    class SlowEngine:  # each payload costs its own, distinct time
+        def infer_batch(self, images, prompt):
+            _t.sleep(sum(delay[bytes(i)] for i in images))
+            return surrogate.infer_batch(images, prompt)
+
+    monkeypatch.setattr(pipeline, "get_engine", SlowEngine)
+
+    def run(payloads):
+        n = len(payloads)
+        cols = {
+            "url": [f"u{i}" for i in range(n)],
+            "warc_ts": pa.array([None] * n, pa.timestamp("us", tz="UTC")),
+        }
+        if branch == "image":
+            fn = pipeline._image_extract_iter(ExtractConfig())
+            cols["html"] = payloads
+        else:
+            fn = pipeline._pdf_ocr_iter(ExtractConfig())
+            cols.update(
+                page_number=pa.array(range(1, n + 1), pa.int32()),
+                total_pages=pa.array([n] * n, pa.int32()),
+                raw_page=payloads,
+                success=[True] * n,
+                error=pa.array([None] * n, pa.string()),
+                latency_s=[0.0] * n,
+            )
+        return next(fn(iter([pa.RecordBatch.from_pydict(cols)]))).to_pydict()
+
+    clean = run([good_a, good_c])
+    got = run([good_a, poison, good_c])
+    assert clean["success"] == [True, True]
+    assert [got["text"][0], got["text"][2]] == clean["text"]
+    assert got["success"] == [True, False, True]
+    assert got["error"] == [None, "corrupt page image", None]
+    # per-row times, not one shared split of the fallback's wall time
+    for lat, payload in zip(got["latency_s"], [good_a, poison, good_c]):
+        assert lat >= delay[payload], got["latency_s"]

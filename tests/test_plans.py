@@ -75,7 +75,11 @@ def test_jvm_only_queries_have_no_python_stage(spark):
 
 def test_pdf_branch_has_skew_breaking_exchange(spark):
     """The page-level salting repartition on (url, page_number) must be
-    in the plan between explode and OCR."""
+    in the plan between explode and OCR, with an explicit count of
+    spark.sql.shuffle.partitions (without one, AQE may coalesce the
+    pages back into a few tasks)."""
+    import re
+
     from extractor.config import ExtractConfig
     from extractor.pipeline import run_extraction
     from extractor.testgen import TEST_MAX_BYTES, pages_df
@@ -85,6 +89,9 @@ def test_pdf_branch_has_skew_breaking_exchange(spark):
     )
     plan = plan_of(df)
     assert "hashpartitioning(url" in plan and "page_number" in plan, plan[:3000]
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    salting = r"hashpartitioning\(url#\d+, page_number#\d+, (\d+)\), REPARTITION_BY_NUM"
+    assert re.findall(salting, plan) == [n], plan[:3000]
 
 
 def test_bucketed_join_avoids_shuffle(spark):

@@ -106,10 +106,8 @@ def test_lambda_reassembly_from_streamed_pages(spark, tmp_path):
     pipeline uses over the stored rows — the resulting doc-grain pdf
     table must equal the batch pipeline's output."""
     from extractor.pipeline import (
-        PDF_PAGE_TEXT_SCHEMA,
-        _pdf_explode_iter,
-        _pdf_ocr_iter,
         _quarantine_error,
+        extract_pdf_pages,
         reassemble_pages,
         route,
         run_extraction,
@@ -125,11 +123,9 @@ def test_lambda_reassembly_from_streamed_pages(spark, tmp_path):
 
     stream = read_pages_stream(spark, pages_dir, max_files=2)
     routed = route(stream).withColumn("route_error", _quarantine_error(CFG))
-    page_rows = (
-        routed.filter(F.col("route_error").isNull() & (F.col("doc_type") == "pdf"))
-        .select("url", "warc_ts", "html")
-        .mapInPandas(_pdf_explode_iter(CFG), schema="url string, warc_ts timestamp, page_number int, total_pages int, raw_page binary, success boolean, error string, latency_s double")
-        .mapInPandas(_pdf_ocr_iter(CFG), schema=PDF_PAGE_TEXT_SCHEMA)
+    page_rows = extract_pdf_pages(
+        routed.filter(F.col("route_error").isNull() & (F.col("doc_type") == "pdf")),
+        CFG,
     )
     q = (
         page_rows.writeStream.format("parquet")
