@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from extractor.sources import _scan
+
 # Explicit field schema — status/length ride as strings in CDXJ (the
 # on-disk convention); cast on the way out.
 _CDX_SCHEMA = (
@@ -152,7 +154,7 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     (surt, ts14, url, mime, http_status, digest, n_bytes) rows.
     Default newline record split — block-splittable, many tasks per
     large index shard."""
-    return parse_cdx_records(spark.read.text(path))
+    return parse_cdx_records(_scan(spark, path))
 
 
 def read_cdx_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame:
@@ -160,8 +162,7 @@ def read_cdx_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataF
     consumed as shards land (file-source stream, same
     :func:`parse_cdx_records` expressions — stream==batch by
     construction; checkpointed file tracking gives exactly-once)."""
-    raw = spark.readStream.option("maxFilesPerTrigger", max_files).text(path)
-    return parse_cdx_records(raw)
+    return parse_cdx_records(_scan(spark, path, max_files=max_files))
 
 
 def cdx_host_lookup(index: DataFrame, host: str) -> DataFrame:

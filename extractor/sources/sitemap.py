@@ -10,16 +10,11 @@ a batch crawl engine must ingest sitemaps at the same scale as the
 archives themselves — large sites ship 50k-URL sitemap files in
 multi-file index sets.
 
-Scale shape — same load-bearing choice as the WET/WARC readers:
-``spark.read.text`` with ``lineSep="<url>"`` rides Hadoop's
-block-splittable LineRecordReader (a big sitemap reads as many
-parallel tasks; sitemaps are routinely single-line XML, so
-newline-split would pin one task per file).  Field extraction is
-pure column expressions (``regexp_extract``) — scan-speed, zero
-Python.  Sitemap INDEX files (``<sitemap>`` entries pointing at
-child sitemaps) ride the same scan via ``read_sitemap_index``.
+Scale shape: the WARC readers' separator scan (``sources.warc``),
+split on ``<url>`` (``<sitemap>`` in INDEX files, which list child
+sitemaps) — sitemaps are routinely single-line XML.
 
-Caveat (documented trade, same family as the WET/WARC framing notes):
+Caveat (same family as the WARC framing caveats):
 a ``<url>`` literal inside a CDATA comment would split a record; the
 fragment then carries no ``<loc>`` and is dropped.  XML entities in
 ``loc`` are unescaped (the five predefined ones — sitemap locs are
@@ -29,6 +24,8 @@ XML-escaped URLs).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from extractor.sources import _scan
 
 URL_SEP = "<url>"
 IDX_SEP = "<sitemap>"
@@ -81,14 +78,13 @@ def parse_sitemap_records(raw: DataFrame) -> DataFrame:
 def read_sitemap(spark: SparkSession, path: str) -> DataFrame:
     """Read sitemap XML files under ``path`` into
     (loc, lastmod, changefreq, priority_bp) rows."""
-    raw = spark.read.option("lineSep", URL_SEP).text(path)
-    return parse_sitemap_records(raw)
+    return parse_sitemap_records(_scan(spark, path, URL_SEP))
 
 
 def read_sitemap_index(spark: SparkSession, path: str) -> DataFrame:
     """Read sitemap INDEX files under ``path`` into (loc, lastmod)
     rows — the child-sitemap list a crawl expands before fetching."""
-    raw = spark.read.option("lineSep", IDX_SEP).text(path)
+    raw = _scan(spark, path, IDX_SEP)
     loc = _xml_unescape(_tag(F.col("value"), "loc"))
     return raw.select(
         loc.alias("loc"),
@@ -142,14 +138,9 @@ def read_sitemap_stream(
     spark: SparkSession, path: str, max_files: int = 4
 ) -> DataFrame:
     """Streaming twin of :func:`read_sitemap`: a drop-directory of
-    sitemap files consumed as they land (file-source stream, same
-    ``lineSep`` record split, same :func:`parse_sitemap_records`
+    sitemap files consumed as they land (the same scan as a
+    file-source stream, same :func:`parse_sitemap_records`
     expressions — stream==batch by construction).  Checkpointed file
     tracking gives exactly-once processing; the frontier-decision
     join (crawl.sitemap_frontier) runs on each micro-batch."""
-    raw = (
-        spark.readStream.option("lineSep", URL_SEP)
-        .option("maxFilesPerTrigger", max_files)
-        .text(path)
-    )
-    return parse_sitemap_records(raw)
+    return parse_sitemap_records(_scan(spark, path, URL_SEP, max_files))

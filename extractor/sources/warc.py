@@ -1,23 +1,34 @@
-"""Raw WARC crawl-archive ingestion (response records).
+"""The WARC record format, and raw WARC crawl-archive ingestion.
 
-WET files (sources.wet) carry pre-extracted text; the PRIMARY crawl
-artifact is the raw WARC: each ``response`` record is a WARC header
-block, a blank line, the captured HTTP response (status line +
-headers), another blank line, then the payload bytes — the HTML the
-extraction pipeline actually wants.  (The reference service receives
-one uploaded document per request, `routes/ocr.py`; this is the batch
-analog — a crawl segment in, an extraction-ready pages table out.)
+Common Crawl ships every crawl three ways: WARC (raw captures, this
+module), WET (extracted text, ``sources.wet``) and WAT (metadata,
+``sources.wat``).  All three use one record format: a ``WARC/1.0``
+header block, a blank line, the content block, then a ``\r\n\r\n``
+trailer.  This module owns that format for all three: the record
+frame every parser selects from (:func:`_frame`), the line-anchored
+header-field reader (:func:`_field`) and the record writer
+(:func:`_record`).  In a raw ``response`` record the content block
+is the captured HTTP response: status line and headers, another
+blank line, then the payload bytes — the HTML the extraction
+pipeline wants.  (The reference service receives one uploaded
+document per request, `routes/ocr.py`; this is the batch analog — a
+crawl segment in, an extraction-ready pages table out.)
 
-Scale shape — identical to the WET reader, and for the same reason:
+Scale shape — the load-bearing choice is HOW a segment is split:
 
-* ``spark.read.text(lineSep="WARC/1.0")`` rides Hadoop's
-  block-splittable LineRecordReader, so a 1 GB segment reads as many
-  parallel tasks.  ``binaryFile`` + a Python WARC library would pin
-  one segment per task and ship every byte through Python — wrong at
+* ``spark.read.text`` with the version line as record separator
+  (``sources._scan``) rides Hadoop's LineRecordReader, which is
+  BLOCK-SPLITTABLE: a 1 GB segment is read by many tasks in parallel,
+  each scanning forward from its block boundary to the next
+  separator.  ``binaryFile`` + a Python WARC library would pin one
+  segment per task and ship every byte through Python — wrong at
   100 TB; not used.
-* WARC/HTTP header fields and the payload are pure column
-  expressions (``substring_index`` / ``regexp_extract``) — the parse
-  runs at scan speed inside whole-stage codegen, no Python anywhere.
+* Header fields and content are pure column expressions
+  (``substring_index`` / ``regexp_extract`` / ``from_json``) — the
+  parse runs at scan speed inside whole-stage codegen, no Python
+  anywhere.  A field matches only at the start of a header line, its
+  name case-insensitively (RFC 9110 §5.1; HTTP/2 captures record
+  lower-case names), and its value never crosses the line end.
 
 Framing caveats (both inherent to separator-based splitting and
 documented trade-offs, not bugs):
@@ -27,81 +38,146 @@ documented trade-offs, not bugs):
   which no splittable text reader can honor; crawl payloads that
   embed WARC version lines are vanishingly rare, and a corrupted
   record surfaces as a URI-less fragment that the type filter drops.
-* Trailing CR/LF of a payload is indistinguishable from the record
-  trailer, so all trailing ``\\r``/``\\n`` are stripped (same trade
-  as sources.wet; md5-pinned by the round-trip oracle).
+  WAT payloads are safer still: JSON escapes control characters, so
+  a payload line can only begin mid-string.
+* Trailing CR/LF of a content block is indistinguishable from the
+  record trailer (plus the ``\n`` a line-oriented writer appends), so
+  all trailing ``\r``/``\n`` are stripped: content that genuinely ends
+  in newlines loses them — the same trade Hadoop's LineRecordReader
+  makes for text.  ``read_warc``'s ``declared_length`` makes the loss
+  measurable per record (see warc_integrity).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from extractor.sources import _scan
 
 WARC_SEP = "WARC/1.0"
 _HDR_END = "\r\n\r\n"
 
 
+def _field(block: Column, name: str, value: str = r"(\S+)") -> Column:
+    """Header ``name``'s value in a header block, ``''`` when absent:
+    matched only at the start of a line, case-insensitively, with the
+    value (``value``'s one group) on the same line."""
+    return F.regexp_extract(block, rf"(?im)^{name}:[ \t]*{value}", 1)
+
+
+def _after_first(col: Column, block: Column) -> Column:
+    """What follows ``block`` and the blank line that ends it in
+    ``col`` (``block`` is ``col``'s prefix up to the first blank line)."""
+    return F.substr(col, F.length(block) + F.lit(len(_HDR_END) + 1))
+
+
+def _line(name: str, value: Column) -> Column:
+    """One ``Name: value`` header line with its CRLF."""
+    return F.concat(F.lit(f"{name}: "), value, F.lit("\r\n"))
+
+
+def _frame(raw: DataFrame, types: tuple[str, ...]) -> DataFrame:
+    """The one WARC record frame: ``value`` chunks (one per
+    ``WARC/1.0``-separated record) → ``(warc_type, url, warc_date,
+    header, content)`` rows, kept only for record types in ``types``
+    with a non-empty target URI (the ``warcinfo`` preamble and
+    fragments drop here).  ``content`` is the content block with the
+    record trailer stripped (framing caveats in the module docstring)."""
+    header = F.substring_index(F.col("value"), _HDR_END, 1)
+    content = F.regexp_replace(_after_first(F.col("value"), header), r"[\r\n]+$", "")
+    return raw.select(
+        _field(header, "WARC-Type").alias("warc_type"),
+        _field(header, "WARC-Target-URI").alias("url"),
+        _field(header, "WARC-Date").alias("warc_date"),
+        header.alias("header"),
+        content.alias("content"),
+    ).filter(F.col("warc_type").isin(*types) & (F.col("url") != ""))
+
+
+def _http_split(content: Column) -> tuple[Column, Column]:
+    """A response content block → (HTTP status line + headers,
+    payload), split at the first empty line: a block that starts with
+    one has no headers, hence the CRLF put in front before the
+    search."""
+    lines = F.concat(F.lit("\r\n"), content)
+    http = F.substring_index(lines, _HDR_END, 1)
+    return F.substr(http, F.lit(3)), _after_first(lines, http)
+
+
+def _record(
+    rtype: str,
+    url: Column,
+    date: Column,
+    content: Column,
+    headers: Sequence[tuple[str, Column]] = (),
+    length: Column | None = None,
+    trailer: str = _HDR_END,
+) -> Column:
+    """The one WARC record writer: the version line, ``WARC-Type``,
+    ``WARC-Target-URI``, ``WARC-Date``, the extra ``headers``,
+    ``Content-Length`` (of ``length``, default ``content``) in bytes,
+    the blank line, ``content`` and ``trailer`` — one codegen'd
+    ``concat`` per row, NULL when any part is NULL."""
+    fields = [
+        ("WARC-Type", F.lit(rtype)),
+        ("WARC-Target-URI", url),
+        ("WARC-Date", date.cast("string")),
+        *headers,
+        (
+            "Content-Length",
+            F.octet_length(content if length is None else length).cast("string"),
+        ),
+    ]
+    return F.concat(
+        F.lit(f"{WARC_SEP}\r\n"),
+        *(_line(name, v) for name, v in fields),
+        F.lit("\r\n"),
+        content,
+        F.lit(trailer),
+    )
+
+
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Read raw WARC segments under ``path`` into
-    (url, warc_date, http_status, content_type, html) rows —
-    ``response`` records only (``warcinfo`` / ``request`` /
-    ``metadata`` records and URI-less fragments are dropped).
+    (url, warc_date, http_status, content_type, location,
+    declared_length, html) rows — ``response`` records only
+    (``warcinfo`` / ``request`` / ``metadata`` records and URI-less
+    fragments are dropped).
 
     ``html`` is the raw HTTP payload string — feed it to the
     extraction pipeline's route/extract stages unchanged.  Non-2xx
     captures are KEPT (status is a column, policy belongs to the
     caller); real crawls replay 404/301 bodies for diffing."""
-    raw = spark.read.option("lineSep", WARC_SEP).text(path)
-    return parse_warc_records(raw)
+    return parse_warc_records(_scan(spark, path, WARC_SEP))
 
 
 def parse_warc_records(raw: DataFrame) -> DataFrame:
-    """Expression-only parse: ``value: string`` chunks (one per
-    ``WARC/1.0``-separated record) → typed response rows.  Shared by
-    :func:`read_warc` and :func:`read_warc_stream` — stream/batch
-    unification by construction.
-
-    Layout per record: WARC headers ``\\r\\n\\r\\n`` HTTP status line +
-    headers ``\\r\\n\\r\\n`` payload.  The first two blank-line splits
-    are positional (``substring_index`` twice); everything after the
-    second is payload."""
-    rec = raw.filter(F.length(F.trim(F.col("value"))) > 0)
-    warc_hdr = F.substring_index(F.col("value"), _HDR_END, 1)
-    http_hdr = F.expr(
-        "substring(substring_index(value, '\\r\\n\\r\\n', 2),"
-        " length(substring_index(value, '\\r\\n\\r\\n', 1)) + 5)"
-    )
-    body = F.expr(
-        "substring(value, length(substring_index(value, '\\r\\n\\r\\n', 2)) + 5)"
-    )
-    body = F.regexp_replace(body, r"[\r\n]+$", "")  # framing caveat
-    url = F.regexp_extract(warc_hdr, r"WARC-Target-URI:\s*(\S+)", 1)
-    ts = F.regexp_extract(warc_hdr, r"WARC-Date:\s*(\S+)", 1)
-    rtype = F.regexp_extract(warc_hdr, r"WARC-Type:\s*(\S+)", 1)
-    status = F.regexp_extract(http_hdr, r"HTTP/[0-9.]+\s+(\d{3})", 1)
-    ctype = F.regexp_extract(http_hdr, r"Content-Type:\s*([^\r\n;]+)", 1)
-    loc = F.regexp_extract(http_hdr, r"Location:\s*(\S+)", 1)
-    return (
-        rec.select(
-            rtype.alias("warc_type"),
-            url.alias("url"),
-            ts.alias("warc_date"),
-            F.nullif(status, F.lit("")).cast("int").alias("http_status"),
-            F.trim(ctype).alias("content_type"),
-            # 3xx captures carry the redirect target — the edge the
-            # redirect-resolution operator follows (crawl.resolve_redirects).
-            F.nullif(loc, F.lit("")).alias("location"),
-            # the WARC header's declared byte count — the integrity
-            # signal that makes the separator-framing trade (trailing
-            # CR/LF strip, embedded version lines) measurable instead
-            # of silent (see warc_integrity).
-            F.nullif(
-                F.regexp_extract(warc_hdr, r"Content-Length:\s*(\d+)", 1),
-                F.lit(""),
-            ).cast("long").alias("declared_length"),
-            body.alias("html"),
-        )
-        .filter((F.col("warc_type") == "response") & (F.col("url") != ""))
-        .drop("warc_type")
+    """Expression-only parse: ``value: string`` chunks → typed
+    response rows.  Shared by :func:`read_warc` and
+    :func:`read_warc_stream` — stream/batch unification by
+    construction.  The content block splits at its first blank line
+    into the HTTP status line + headers and the payload."""
+    http, payload = _http_split(F.col("content"))
+    return _frame(raw, ("response",)).select(
+        "url",
+        "warc_date",
+        F.nullif(F.regexp_extract(http, r"HTTP/[0-9.]+\s+(\d{3})", 1), F.lit(""))
+        .cast("int")
+        .alias("http_status"),
+        F.trim(_field(http, "Content-Type", r"([^\r\n;]*)")).alias("content_type"),
+        # 3xx captures carry the redirect target — the edge the
+        # redirect-resolution operator follows (crawl.resolve_redirects).
+        F.nullif(_field(http, "Location"), F.lit("")).alias("location"),
+        # the WARC header's declared byte count — the integrity
+        # signal that makes the separator-framing trade (trailing
+        # CR/LF strip, embedded version lines) measurable instead
+        # of silent (see warc_integrity).
+        F.nullif(_field(F.col("header"), "Content-Length", r"(\d+)"), F.lit(""))
+        .cast("long")
+        .alias("declared_length"),
+        payload.alias("html"),
     )
 
 
@@ -128,12 +204,7 @@ def read_warc_stream(spark: SparkSession, path: str, max_files: int = 4) -> Data
     """Streaming twin of :func:`read_warc` (drop-directory file
     source, exactly-once via checkpointed file tracking) — the crawl
     fetcher appends segments, the extraction stream consumes them."""
-    raw = (
-        spark.readStream.option("lineSep", WARC_SEP)
-        .option("maxFilesPerTrigger", max_files)
-        .text(path)
-    )
-    return parse_warc_records(raw)
+    return parse_warc_records(_scan(spark, path, WARC_SEP, max_files))
 
 
 def to_warc_records(
@@ -149,7 +220,8 @@ def to_warc_records(
     """Format response rows as raw WARC ``response`` records — one
     ``value: string`` column for ``df.write.text``; one codegen'd
     concat per row, no Python, no collect (the distributed writer
-    half of the round-trip, mirroring sources.wet.to_wet_records).
+    half of the round-trip).  ``Content-Length`` counts the payload
+    bytes only, not the HTTP header block.
 
     ``location_col`` (optional): a redirect-target column emitted as
     an HTTP ``Location`` header when non-null, so 3xx captures
@@ -161,41 +233,28 @@ def to_warc_records(
     to_deduped_warc_records).  Default None leaves the output
     byte-identical to the pre-digest writer."""
     body = F.col(body_col)
-    loc_hdr = (
-        F.when(
-            F.col(location_col).isNotNull(),
-            F.concat(F.lit("Location: "), F.col(location_col), F.lit("\r\n")),
-        ).otherwise(F.lit(""))
-        if location_col
-        else F.lit("")
+    loc = F.lit("")
+    if location_col:
+        loc = F.when(
+            F.col(location_col).isNotNull(), _line("Location", F.col(location_col))
+        ).otherwise(loc)
+    http = F.concat(
+        F.lit("HTTP/1.1 "),
+        F.col(status_col).cast("string"),
+        F.lit(" \r\n"),
+        _line("Content-Type", F.col(ctype_col)),
+        loc,
+        F.lit("\r\n"),
+        body,
     )
-    digest_hdr = (
-        F.concat(
-            F.lit("WARC-Payload-Digest: md5:"), F.col(digest_col), F.lit("\r\n")
-        )
+    digest = (
+        [("WARC-Payload-Digest", F.concat(F.lit("md5:"), F.col(digest_col)))]
         if digest_col
-        else F.lit("")
+        else []
     )
     return df.select(
-        F.concat(
-            F.lit(f"{WARC_SEP}\r\n" "WARC-Type: response\r\n" "WARC-Target-URI: "),
-            F.col(url_col),
-            F.lit("\r\nWARC-Date: "),
-            F.col(date_col).cast("string"),
-            F.lit("\r\n"),
-            digest_hdr,
-            F.lit("Content-Length: "),
-            F.octet_length(body).cast("string"),
-            F.lit(_HDR_END),
-            F.lit("HTTP/1.1 "),
-            F.col(status_col).cast("string"),
-            F.lit(" \r\nContent-Type: "),
-            F.col(ctype_col),
-            F.lit("\r\n"),
-            loc_hdr,
-            F.lit("\r\n"),
-            body,
-            F.lit("\r\n\r\n"),
+        _record(
+            "response", F.col(url_col), F.col(date_col), http, digest, length=body
         ).alias("value")
     )
 
@@ -310,52 +369,32 @@ def parse_warc_any(raw: DataFrame) -> DataFrame:
     """Expression-only parse keeping BOTH ``response`` and
     ``revisit`` records — the reader for deduplicated archives
     (real Common Crawl segments carry revisit records;
-    :func:`parse_warc_records` is the responses-only fast path and
-    stays byte-identical for callers that want payloads only).
+    :func:`parse_warc_records` is the responses-only fast path).
 
     Revisit rows carry the WARC 1.1 §6.7.2 pointer headers
     (``payload_digest``, ``refers_to_url``, ``refers_to_date``) and
     an empty ``html``; response rows carry the payload plus their
-    own ``payload_digest`` header when the writer emitted one.  Same
-    splittable-scan / whole-stage-codegen shape as the response
-    parser: zero Python."""
-    rec = raw.filter(F.length(F.trim(F.col("value"))) > 0)
-    warc_hdr = F.substring_index(F.col("value"), _HDR_END, 1)
-    body = F.expr(
-        "substring(value, length(substring_index(value, '\\r\\n\\r\\n', 2)) + 5)"
-    )
-    body = F.regexp_replace(body, r"[\r\n]+$", "")  # framing caveat
+    own ``payload_digest`` header when the writer emitted one."""
+    header = F.col("header")
 
-    def hdr(name: str):
-        return F.nullif(
-            F.regexp_extract(warc_hdr, name + r":\s*(\S+)", 1), F.lit("")
-        )
+    def hdr(name: str, value: str = r"(\S+)") -> Column:
+        return F.nullif(_field(header, name, value), F.lit(""))
 
-    return (
-        rec.select(
-            F.regexp_extract(warc_hdr, r"WARC-Type:\s*(\S+)", 1).alias("warc_type"),
-            F.regexp_extract(warc_hdr, r"WARC-Target-URI:\s*(\S+)", 1).alias("url"),
-            F.regexp_extract(warc_hdr, r"WARC-Date:\s*(\S+)", 1).alias("warc_date"),
-            F.nullif(
-                F.regexp_extract(
-                    warc_hdr, r"WARC-Payload-Digest:\s*md5:(\S+)", 1
-                ),
-                F.lit(""),
-            ).alias("payload_digest"),
-            hdr("WARC-Refers-To-Target-URI").alias("refers_to_url"),
-            hdr("WARC-Refers-To-Date").alias("refers_to_date"),
-            body.alias("html"),
-        )
-        .filter(F.col("warc_type").isin("response", "revisit") & (F.col("url") != ""))
+    return _frame(raw, ("response", "revisit")).select(
+        "warc_type",
+        "url",
+        "warc_date",
+        hdr("WARC-Payload-Digest", r"md5:(\S+)").alias("payload_digest"),
+        hdr("WARC-Refers-To-Target-URI").alias("refers_to_url"),
+        hdr("WARC-Refers-To-Date").alias("refers_to_date"),
+        _http_split(F.col("content"))[1].alias("html"),
     )
 
 
 def read_warc_any(spark: SparkSession, path: str) -> DataFrame:
     """Read raw WARC segments keeping response AND revisit records
-    (:func:`parse_warc_any`) — the block-splittable scan is identical
-    to :func:`read_warc`."""
-    raw = spark.read.option("lineSep", WARC_SEP).text(path)
-    return parse_warc_any(raw)
+    (:func:`parse_warc_any`) — the same scan as :func:`read_warc`."""
+    return parse_warc_any(_scan(spark, path, WARC_SEP))
 
 
 def to_deduped_warc_records(
@@ -398,20 +437,19 @@ def to_deduped_warc_records(
     )
     resp_recs = to_warc_records(resp, digest_col="payload_digest")
     rev_recs = cls.filter(F.col("record_type") == "revisit").select(
-        F.concat(
-            F.lit(f"{WARC_SEP}\r\n" "WARC-Type: revisit\r\n" "WARC-Target-URI: "),
+        _record(
+            "revisit",
             F.col("url"),
-            F.lit("\r\nWARC-Date: "),
             F.col("warc_date"),
-            F.lit("\r\nWARC-Payload-Digest: md5:"),
-            F.col("payload_digest"),
-            F.lit("\r\nWARC-Refers-To-Target-URI: "),
-            F.col("refers_to_url"),
-            F.lit("\r\nWARC-Refers-To-Date: "),
-            F.col("refers_to_date"),
-            F.lit("\r\nContent-Length: 0"),
-            F.lit(_HDR_END),
-            F.lit("\r\n"),
+            F.lit(""),
+            [
+                ("WARC-Payload-Digest", F.concat(F.lit("md5:"), F.col("payload_digest"))),
+                ("WARC-Refers-To-Target-URI", F.col("refers_to_url")),
+                ("WARC-Refers-To-Date", F.col("refers_to_date")),
+            ],
+            # revisit records end in one CRLF, not the full trailer;
+            # readers strip either, and archives already written match
+            trailer="\r\n",
         ).alias("value")
     )
     return resp_recs.unionAll(rev_recs)

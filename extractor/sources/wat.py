@@ -8,29 +8,18 @@ without touching raw HTML: the edges html_outlinks would extract are
 already materialized per capture, so webgraph.pagerank_int /
 host_edges / anchor analysis can run straight off the archive.
 
-Scale shape: identical to the WET reader — ``spark.read.text`` with
-``lineSep="WARC/1.0"`` rides Hadoop's block-splittable
-LineRecordReader (a 1 GB segment reads as many tasks), header fields
-parse as anchored regexes, and the JSON payload parses with ONE
-``from_json`` against an explicit schema — all JVM expressions, zero
-Python in the per-record path.  The writer half is one ``to_json`` +
-``concat`` per row.
-
-Framing caveat (shared with warc.py, documented not hidden): the
-separator split assumes the literal ``WARC/1.0`` never starts a line
-inside a payload.  For WAT specifically this is SAFER than for raw
-WARC: JSON strings escape control characters, so a newline inside a
-field value is the two-character ``\\n`` — a payload line can only
-begin mid-string content, which real link/title data doesn't produce;
-adversarial payloads remain the stated limit of separator framing.
+The record format, its splittable scan and its framing caveats are
+``sources.warc``'s; the JSON payload parses with ONE ``from_json``
+against an explicit schema, and the writer half is one ``to_json``
+per row — zero Python in the per-record path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-WAT_SEP = "WARC/1.0"
-_HDR_END = "\r\n\r\n"
+from extractor.sources import _scan
+from extractor.sources.warc import WARC_SEP, _frame, _record
 
 # Explicit envelope schema (the Common-Crawl WAT JSON paths for head
 # title + outlinks; dashed names need backticks).  One from_json —
@@ -51,40 +40,25 @@ def read_wat(spark: SparkSession, path: str) -> DataFrame:
     without a target URI are dropped.  Absent head titles surface as
     NULL; absent link lists as an empty array (a page with no
     outlinks is data, not a parse failure)."""
-    raw = spark.read.option("lineSep", WAT_SEP).text(path)
-    return parse_wat_records(raw)
+    return parse_wat_records(_scan(spark, path, WARC_SEP))
 
 
 def parse_wat_records(raw: DataFrame) -> DataFrame:
     """Expression-only parse: record chunks → envelope fields.
     Shared verbatim by :func:`read_wat` and :func:`read_wat_stream`
     (stream==batch by construction)."""
-    rec = raw.filter(F.length(F.trim(F.col("value"))) > 0)
-    hdr = F.substring_index(F.col("value"), _HDR_END, 1)
-    body = F.expr(
-        "substring(value, length(substring_index(value, '\\r\\n\\r\\n', 1)) + 5)"
-    )
-    body = F.regexp_replace(body, r"[\r\n]+$", "")
-    url = F.regexp_extract(hdr, r"WARC-Target-URI:\s*(\S+)", 1)
-    ts = F.regexp_extract(hdr, r"WARC-Date:\s*(\S+)", 1)
-    rtype = F.regexp_extract(hdr, r"WARC-Type:\s*(\S+)", 1)
-    env = F.from_json(body, _WAT_SCHEMA)
+    env = F.from_json(F.col("content"), _WAT_SCHEMA)
     html_meta = env[
         "Envelope"
     ]["Payload-Metadata"]["HTTP-Response-Metadata"]["HTML-Metadata"]
-    return (
-        rec.select(
-            url.alias("url"),
-            ts.alias("warc_date"),
-            rtype.alias("warc_type"),
-            html_meta["Head"]["Title"].alias("title"),
-            F.coalesce(
-                F.transform(html_meta["Links"], lambda l: l["url"]),
-                F.array().cast("array<string>"),
-            ).alias("links"),
-        )
-        .filter((F.col("warc_type") == "metadata") & (F.col("url") != ""))
-        .drop("warc_type")
+    return _frame(raw, ("metadata",)).select(
+        "url",
+        "warc_date",
+        html_meta["Head"]["Title"].alias("title"),
+        F.coalesce(
+            F.transform(html_meta["Links"], lambda l: l["url"]),
+            F.array().cast("array<string>"),
+        ).alias("links"),
     )
 
 
@@ -92,12 +66,7 @@ def read_wat_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataF
     """Streaming twin of :func:`read_wat` (drop-directory file
     source, checkpointed exactly-once segment tracking, same parse
     expressions)."""
-    raw = (
-        spark.readStream.option("lineSep", WAT_SEP)
-        .option("maxFilesPerTrigger", max_files)
-        .text(path)
-    )
-    return parse_wat_records(raw)
+    return parse_wat_records(_scan(spark, path, WARC_SEP, max_files))
 
 
 def to_wat_records(
@@ -123,15 +92,11 @@ def to_wat_records(
     )
     env = F.to_json(F.struct(F.struct(env_obj.alias("Payload-Metadata")).alias("Envelope")))
     return df.select(
-        F.concat(
-            F.lit(f"{WAT_SEP}\r\n" "WARC-Type: metadata\r\n" "WARC-Target-URI: "),
+        _record(
+            "metadata",
             F.col(url_col),
-            F.lit("\r\nWARC-Date: "),
-            F.col(date_col).cast("string"),
-            F.lit("\r\nContent-Type: application/json\r\nContent-Length: "),
-            F.octet_length(env).cast("string"),
-            F.lit(_HDR_END),
+            F.col(date_col),
             env,
-            F.lit("\r\n\r\n"),
+            [("Content-Type", F.lit("application/json"))],
         ).alias("value")
     )

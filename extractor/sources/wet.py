@@ -1,57 +1,27 @@
-"""WET-style crawl-archive ingestion.
+"""WET-style crawl-archive ingestion: Common-Crawl text extracts.
 
-Common-Crawl text extracts ship as WET files: concatenated records,
-each a ``WARC/1.0`` header block (``WARC-Type``, ``WARC-Target-URI``,
-``WARC-Date``, …) separated from the record body by a blank line.
-(The reference service ingests one uploaded file per request; this is
-the batch analog — a crawl segment in, a table out.)
-
-Scale shape — the load-bearing choice is HOW the file is split:
-
-* ``spark.read.text`` with a custom record separator
-  (``lineSep="WARC/1.0"``) rides Hadoop's LineRecordReader, which is
-  BLOCK-SPLITTABLE: a 1 GB segment is read by many tasks in
-  parallel, each scanning forward from its block boundary to the
-  next separator.  This is the formulation that survives 100 TB of
-  segments.
-* The alternative (``binaryFile`` + per-file Python parse) pins one
-  whole segment per task and ships the bytes through Python — both
-  wrong at scale; not used.
-
-Header fields and the body are then pure column expressions
-(``substring_index`` / ``regexp_extract`` — JVM codegen, no Python
-anywhere), so parsing runs at scan speed.
+WET files are concatenated WARC records (the format, its splittable
+scan and its framing caveats: ``sources.warc``) whose ``conversion``
+records carry a page's extracted text as the content block.  (The
+reference service ingests one uploaded file per request; this is the
+batch analog — a crawl segment in, a table out.)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# Record separator. WET files begin every record (including the
-# leading warcinfo record) with this version line.
-WET_SEP = "WARC/1.0"
-_HDR_END = "\r\n\r\n"
+from extractor.sources import _scan
+from extractor.sources.warc import WARC_SEP, _frame, _record
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
     """Read WET record files under ``path`` into
     (url, warc_date, text) rows — ``conversion`` records only (the
     per-file ``warcinfo`` preamble record is dropped, as are records
-    without a target URI).
-
-    The body is everything after the header block's blank line, with
-    the record-framing trailer stripped; header fields parse via
-    anchored regexes over the header block only.
-
-    Framing caveat (inherent to separator-based splitting): trailing
-    CR/LF on a body is indistinguishable from the ``\\r\\n\\r\\n``
-    record trailer plus any line terminator a line-oriented writer
-    appended, so ALL trailing ``\\r``/``\\n`` are stripped.  Bodies
-    whose content genuinely ends in newlines lose them — the same
-    trade Hadoop's own LineRecordReader makes for text.
-    """
-    raw = spark.read.option("lineSep", WET_SEP).text(path)
-    return parse_wet_records(raw)
+    without a target URI).  ``text`` loses any trailing CR/LF (framing
+    caveat in ``sources.warc``)."""
+    return parse_wet_records(_scan(spark, path, WARC_SEP))
 
 
 def parse_wet_records(raw: DataFrame) -> DataFrame:
@@ -60,40 +30,18 @@ def parse_wet_records(raw: DataFrame) -> DataFrame:
     text).  Pure column expressions, so the SAME transform serves the
     batch reader and :func:`read_wet_stream` — stream/batch
     unification by construction."""
-    rec = raw.filter(F.length(F.trim(F.col("value"))) > 0)
-    hdr = F.substring_index(F.col("value"), _HDR_END, 1)
-    body = F.expr(
-        "substring(value, length(substring_index(value, '\\r\\n\\r\\n', 1)) + 5)"
-    )
-    # strip the record-framing trailer (see framing caveat above)
-    body = F.regexp_replace(body, r"[\r\n]+$", "")
-    url = F.regexp_extract(hdr, r"WARC-Target-URI:\s*(\S+)", 1)
-    ts = F.regexp_extract(hdr, r"WARC-Date:\s*(\S+)", 1)
-    rtype = F.regexp_extract(hdr, r"WARC-Type:\s*(\S+)", 1)
-    return (
-        rec.select(
-            url.alias("url"),
-            ts.alias("warc_date"),
-            rtype.alias("warc_type"),
-            body.alias("text"),
-        )
-        .filter((F.col("warc_type") == "conversion") & (F.col("url") != ""))
-        .drop("warc_type")
+    return _frame(raw, ("conversion",)).select(
+        "url", "warc_date", F.col("content").alias("text")
     )
 
 
 def read_wet_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame:
     """Streaming twin of :func:`read_wet`: a crawl drop-directory of
-    WET segments consumed as they land (file-source stream, same
-    ``lineSep`` record split, same :func:`parse_wet_records`
-    expressions).  Checkpointed file tracking gives exactly-once
-    segment processing; downstream stateless stages run unchanged."""
-    raw = (
-        spark.readStream.option("lineSep", WET_SEP)
-        .option("maxFilesPerTrigger", max_files)
-        .text(path)
-    )
-    return parse_wet_records(raw)
+    WET segments consumed as they land (same scan as a file-source
+    stream, same :func:`parse_wet_records` expressions).  Checkpointed
+    file tracking gives exactly-once segment processing; downstream
+    stateless stages run unchanged."""
+    return parse_wet_records(_scan(spark, path, WARC_SEP, max_files))
 
 
 def to_wet_records(
@@ -109,20 +57,11 @@ def to_wet_records(
     is one ``concat`` per row (JVM codegen, no Python, no collect),
     so emitting WET segments scales exactly like the scan.  The text
     writer terminates each record with ``\\n`` after the ``\\r\\n\\r\\n``
-    trailer; ``read_wet`` strips both (framing caveat there).
+    trailer; ``read_wet`` strips both.
     """
-    body = F.col(text_col)
     return df.select(
-        F.concat(
-            F.lit(f"{WET_SEP}\r\n" "WARC-Type: conversion\r\n" "WARC-Target-URI: "),
-            F.col(url_col),
-            F.lit("\r\nWARC-Date: "),
-            F.col(date_col).cast("string"),
-            F.lit("\r\nContent-Length: "),
-            F.octet_length(body).cast("string"),
-            F.lit(_HDR_END),
-            body,
-            F.lit("\r\n\r\n"),
+        _record(
+            "conversion", F.col(url_col), F.col(date_col), F.col(text_col)
         ).alias("value")
     )
 
@@ -132,7 +71,7 @@ def wet_file(records: list[tuple[str, str, str]], segment: str) -> str:
     (real WET segments carry one; the parser must skip it) followed
     by one ``conversion`` record per (url, date, body)."""
     parts = [
-        f"{WET_SEP}\r\n"
+        f"{WARC_SEP}\r\n"
         f"WARC-Type: warcinfo\r\n"
         f"WARC-Filename: {segment}\r\n"
         f"\r\n"
@@ -140,7 +79,7 @@ def wet_file(records: list[tuple[str, str, str]], segment: str) -> str:
     ]
     for url, date, body in records:
         parts.append(
-            f"{WET_SEP}\r\n"
+            f"{WARC_SEP}\r\n"
             f"WARC-Type: conversion\r\n"
             f"WARC-Target-URI: {url}\r\n"
             f"WARC-Date: {date}\r\n"

@@ -124,15 +124,25 @@ def _committed_manifests(out_dir: str, include_replaced: bool = False) -> list[d
     # is a read-modify-write; concurrent committers need the real
     # catalog (Iceberg) this module stands in for.
     out.sort(key=lambda m: (m.get("seq", 0), m["run_id"]))
-    if include_replaced:
-        return out
-    # A compaction manifest lists the run_ids it replaces; replaced
-    # snapshots stay on disk (so as-of time travel still reaches them)
-    # but drop out of the live view.
-    replaced: set[str] = set()
-    for m in out:
-        replaced.update(m.get("replaces", []))
-    return [m for m in out if m["run_id"] not in replaced]
+    return out if include_replaced else _live(out)
+
+
+def _live(manifests: list[dict]) -> list[dict]:
+    """The live set of a manifest list: a compaction manifest lists
+    the run_ids it replaces, and those drop out.  Replaced snapshots
+    stay on disk (so as-of time travel still reaches them) but not in
+    the live view."""
+    replaced = {r for m in manifests for r in m.get("replaces", [])}
+    return [m for m in manifests if m["run_id"] not in replaced]
+
+
+def _next_seq(out_dir: str) -> int:
+    """The commit-order stamp for the next manifest: one past every
+    manifest committed so far, replaced ones included."""
+    return max(
+        (m.get("seq", 0) for m in _committed_manifests(out_dir, include_replaced=True)),
+        default=0,
+    ) + 1
 
 
 def _is_committed(out_dir: str, run_id: str) -> bool:
@@ -254,9 +264,9 @@ def write_snapshot(
 
     cdir = os.path.join(out_dir, "_committed")
     os.makedirs(cdir, exist_ok=True)
-    seq = max((m.get("seq", 0) for m in _committed_manifests(out_dir)), default=0) + 1
     manifest = {
-        "run_id": run_id, "seq": seq, "data": data_path, "lineage": lineage_path
+        "run_id": run_id, "seq": _next_seq(out_dir), "data": data_path,
+        "lineage": lineage_path,
     }
     _commit_manifest(cdir, run_id, manifest)
     return run_id
@@ -301,11 +311,7 @@ def read_extracted(
         ids = [m["run_id"] for m in full]
         if as_of not in ids:
             raise FileNotFoundError(f"no committed snapshot {as_of} under {out_dir}")
-        prefix = full[: ids.index(as_of) + 1]
-        replaced: set[str] = set()
-        for m in prefix:
-            replaced.update(m.get("replaces", []))
-        manifests = [m for m in prefix if m["run_id"] not in replaced]
+        manifests = _live(full[: ids.index(as_of) + 1])
     if not manifests:
         raise FileNotFoundError(f"no committed snapshots under {out_dir}")
     gone = [m["run_id"] for m in manifests if m.get("expired")]
@@ -408,13 +414,9 @@ def compact_snapshots(
     lineage.write.mode("errorifexists").parquet(lineage_path)
 
     cdir = os.path.join(out_dir, "_committed")
-    seq = max(
-        (m.get("seq", 0) for m in _committed_manifests(out_dir, include_replaced=True)),
-        default=0,
-    ) + 1
     manifest = {
         "run_id": run_id,
-        "seq": seq,
+        "seq": _next_seq(out_dir),
         "data": data_path,
         "lineage": lineage_path,
         "replaces": [m["run_id"] for m in live],
@@ -464,21 +466,13 @@ def expire_snapshots(out_dir: str, keep_last: int = 1) -> list[str]:
 
     cdir = os.path.join(out_dir, "_committed")
     full = _committed_manifests(out_dir, include_replaced=True)
-    live_now = {m["run_id"] for m in _committed_manifests(out_dir)}
-
-    def live_at(idx: int) -> set[str]:
-        replaced: set[str] = set()
-        for m in full[: idx + 1]:
-            replaced.update(m.get("replaces", []))
-        return {
-            m["run_id"] for m in full[: idx + 1] if m["run_id"] not in replaced
-        }
-
+    live_now = {m["run_id"] for m in _live(full)}
     replaced_ms = [m for m in full if m["run_id"] not in live_now]
     needed = set(live_now)
     retained = replaced_ms[-keep_last:] if keep_last > 0 else []
     for m in retained:
-        needed |= live_at(next(i for i, f in enumerate(full) if f is m))
+        idx = next(i for i, f in enumerate(full) if f is m)
+        needed |= {r["run_id"] for r in _live(full[: idx + 1])}
     expired_ids = []
     for m in replaced_ms:
         if m["run_id"] in needed:

@@ -1,8 +1,10 @@
-"""WET crawl-archive reader tests: round-trip, record filtering,
+"""Crawl-source reader and writer tests (WET, WARC, WAT, sitemap, CDX):
+round-trips, record filtering,
 multi-file reads, and the splittable-scan plan shape."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from extractor.sources.wet import read_wet, to_wet_records, wet_file
@@ -907,3 +909,140 @@ def test_deduped_warc_roundtrip_pointers_resolve(spark, tmp_path):
 
     for r in resp.values():
         assert hashlib.md5(r.html.encode()).hexdigest() == r.payload_digest
+
+
+# ---------------------------------------------------------------------------
+# The shared WARC record frame: header fields, writer bytes
+# ---------------------------------------------------------------------------
+
+
+def _warc_record(rtype: str, uri: str, content: str) -> str:
+    return (
+        f"WARC/1.0\r\nWARC-Type: {rtype}\r\nWARC-Target-URI:{uri}\r\n"
+        f"WARC-Date: 2025-06-03T00:00:00Z\r\n\r\n{content}\r\n\r\n"
+    )
+
+
+def _http(*headers: str) -> str:
+    return "HTTP/1.1 200 OK\r\n" + "".join(h + "\r\n" for h in headers) + "\r\n<p>x</p>"
+
+
+_OK = " https://ok.test/"
+
+
+@pytest.mark.parametrize(
+    "reader, content, cols, expected",
+    [
+        # an empty URI must drop the record, not read the next line
+        pytest.param(
+            read_warc,
+            _warc_record("response", _OK, _http("Content-Type: text/html"))
+            + _warc_record("response", "", _http("Content-Type: text/html")),
+            ["url"], [("https://ok.test/",)], id="warc-empty-uri",
+        ),
+        pytest.param(
+            read_wet,
+            _warc_record("conversion", _OK, "text")
+            + _warc_record("conversion", "", "text"),
+            ["url"], [("https://ok.test/",)], id="wet-empty-uri",
+        ),
+        pytest.param(
+            read_wat,
+            _warc_record("metadata", _OK, "{}") + _warc_record("metadata", "", "{}"),
+            ["url"], [("https://ok.test/",)], id="wat-empty-uri",
+        ),
+        # Location is a header of its own, not a suffix of Content-Location
+        pytest.param(
+            read_warc,
+            _warc_record(
+                "response", _OK,
+                _http("Content-Type: text/html", "Content-Location: /index.en.html"),
+            ),
+            ["http_status", "location"], [(200, None)], id="warc-content-location",
+        ),
+        # header names are case-insensitive (HTTP/2 captures are lower-case)
+        pytest.param(
+            read_warc,
+            _warc_record("response", _OK, _http("content-type: text/html; charset=utf-8")),
+            ["content_type", "html"], [("text/html", "<p>x</p>")],
+            id="warc-lowercase-content-type",
+        ),
+    ],
+)
+def test_header_fields_are_line_anchored(spark, tmp_path, reader, content, cols, expected):
+    """A header field matches only at the start of a header line, by
+    case-insensitive name, with its value on that line."""
+    p = tmp_path / "seg"
+    p.write_bytes(content.encode("utf-8"))
+    assert [tuple(r) for r in reader(spark, str(p)).select(*cols).collect()] == expected
+
+
+def test_writer_bytes_are_pinned(spark):
+    """Every record writer's exact output on a two-row frame — the
+    round-trip tests compare parsed rows only, so a byte change in a
+    writer shows here."""
+    from extractor.sources.warc import to_deduped_warc_records
+
+    src = spark.createDataFrame(
+        [
+            ("https://p.test/a", "2025-06-01T00:00:00Z", 301, "text/html",
+             "<p>same ü</p>", "https://p.test/b", "0123456789abcdef0123456789abcdef",
+             "text ü\nline two", 'T"i \\ tle', ["https://x.test/1", "https://y.test/2"]),
+            ("https://p.test/b", "2025-06-02T00:00:00Z", 200, "text/html",
+             "<p>same ü</p>", None, "fedcba9876543210fedcba9876543210",
+             "plain", None, []),
+        ],
+        "url string, warc_date string, http_status int, content_type string,"
+        " html string, location string, digest string, text string, title string,"
+        " links array<string>",
+    )
+
+    def values(df):
+        return sorted(r.value for r in df.collect())
+
+    a = "WARC-Target-URI: https://p.test/a\r\nWARC-Date: 2025-06-01T00:00:00Z\r\n"
+    b = "WARC-Target-URI: https://p.test/b\r\nWARC-Date: 2025-06-02T00:00:00Z\r\n"
+    body = "\r\n<p>same ü</p>\r\n\r\n"
+    assert values(to_warc_records(src)) == [
+        f"WARC/1.0\r\nWARC-Type: response\r\n{a}Content-Length: 14\r\n\r\n"
+        f"HTTP/1.1 301 \r\nContent-Type: text/html\r\n{body}",
+        f"WARC/1.0\r\nWARC-Type: response\r\n{b}Content-Length: 14\r\n\r\n"
+        f"HTTP/1.1 200 \r\nContent-Type: text/html\r\n{body}",
+    ]
+    assert values(
+        to_warc_records(src, location_col="location", digest_col="digest")
+    ) == [
+        f"WARC/1.0\r\nWARC-Type: response\r\n{a}"
+        "WARC-Payload-Digest: md5:0123456789abcdef0123456789abcdef\r\n"
+        "Content-Length: 14\r\n\r\nHTTP/1.1 301 \r\nContent-Type: text/html\r\n"
+        f"Location: https://p.test/b\r\n{body}",
+        f"WARC/1.0\r\nWARC-Type: response\r\n{b}"
+        "WARC-Payload-Digest: md5:fedcba9876543210fedcba9876543210\r\n"
+        f"Content-Length: 14\r\n\r\nHTTP/1.1 200 \r\nContent-Type: text/html\r\n{body}",
+    ]
+    assert values(to_wet_records(src)) == [
+        f"WARC/1.0\r\nWARC-Type: conversion\r\n{a}Content-Length: 16\r\n\r\n"
+        "text ü\nline two\r\n\r\n",
+        f"WARC/1.0\r\nWARC-Type: conversion\r\n{b}Content-Length: 5\r\n\r\n"
+        "plain\r\n\r\n",
+    ]
+    env = '{"Envelope":{"Payload-Metadata":{"HTTP-Response-Metadata":{"HTML-Metadata":'
+    assert values(to_wat_records(src)) == [
+        f"WARC/1.0\r\nWARC-Type: metadata\r\n{a}Content-Type: application/json\r\n"
+        f"Content-Length: 175\r\n\r\n{env}"
+        '{"Head":{"Title":"T\\"i \\\\ tle"},'
+        '"Links":[{"url":"https://x.test/1"},{"url":"https://y.test/2"}]}}}}}'
+        "\r\n\r\n",
+        f"WARC/1.0\r\nWARC-Type: metadata\r\n{b}Content-Type: application/json\r\n"
+        f"Content-Length: 101\r\n\r\n{env}"
+        '{"Head":{},"Links":[]}}}}}\r\n\r\n',
+    ]
+    digest = "WARC-Payload-Digest: md5:c5df36ea8eea3d946aed0ad97289f206\r\n"
+    assert values(to_deduped_warc_records(src)) == [
+        f"WARC/1.0\r\nWARC-Type: response\r\n{a}{digest}Content-Length: 14\r\n\r\n"
+        f"HTTP/1.1 301 \r\nContent-Type: text/html\r\n{body}",
+        f"WARC/1.0\r\nWARC-Type: revisit\r\n{b}{digest}"
+        "WARC-Refers-To-Target-URI: https://p.test/a\r\n"
+        "WARC-Refers-To-Date: 2025-06-01T00:00:00Z\r\n"
+        "Content-Length: 0\r\n\r\n\r\n",
+    ]
